@@ -5,102 +5,22 @@ winner, ``utils/NaraMergeUtil.scala:129-135``): the winner per doc_id is the
 event with the greatest ``(seq, part)`` — a total order because ``(part,
 seq)`` is unique and seq is strictly increasing per part.
 
-Scale design: implemented as ``groupBy(key).agg(max_by(...))`` rather than a
-row_number window. A window has NO map-side combine — all events of a hot
-doc_id meet in one reducer (the skew the north_rule calls out). ``max_by``
-is a partial aggregate: each map task pre-reduces its local events per key,
-so a doc_id with 10^6 updates in a batch ships ~#map-tasks rows, not 10^6.
-This makes pre-dedup salting unnecessary in the common path; an explicit
-two-phase salted variant is provided for adversarial skew and for engines
-where partial agg is disabled.
+Scale design: one ``groupBy(key).agg(max(packed (seq, part, op)))`` over the
+narrow key columns, rather than a row_number window. A window has NO
+map-side combine — all events of a hot doc_id meet in one reducer (the skew
+the north_rule calls out). ``max`` is a partial aggregate: each map task
+pre-reduces its local events per key, so a doc_id with 10^6 updates in a
+batch ships ~#map-tasks rows, not 10^6, and pre-dedup salting is
+unnecessary (measured slower on a Zipf feed, BENCH.md "Skew"). Only the
+narrow ``(key, seq, part, op)`` columns enter the shuffle; the replay
+engine recovers the wide payload afterwards by joining the winners back to
+the source scan (late materialization).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-ORDER_COLS = ("seq", "part")
-
-
-def latest_by_key(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_cols: tuple[str, ...] = ORDER_COLS,
-) -> DataFrame:
-    """One row per key: the row with the max (seq, part). Columns preserved."""
-    payload = [c for c in df.columns if c != key]
-    ord_struct = F.struct(*[F.col(c) for c in order_cols])
-    agg = df.groupBy(key).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_w")
-    )
-    return agg.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-
-
-def latest_by_key_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_cols: tuple[str, ...] = ORDER_COLS,
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Two-phase dedup with explicit salt: groupBy(key, salt) then groupBy(key).
-
-    For hot keys, phase 1 spreads a single key over ``salt_buckets``
-    reducers; phase 2 reduces at most ``salt_buckets`` rows per key.
-    """
-    payload = [c for c in df.columns if c != key]
-    ord_struct = F.struct(*[F.col(c) for c in order_cols])
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets))
-    )
-    phase1 = salted.groupBy(key, "_salt").agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_w")
-    )
-    phase1 = phase1.select(
-        key, *[F.col(f"_w.{c}").alias(c) for c in payload]
-    )
-    phase2 = phase1.groupBy(key).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_w")
-    )
-    return phase2.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-
-
-def winner_keys(
-    df: DataFrame,
-    key: str = "doc_id",
-    order_cols: tuple[str, ...] = ORDER_COLS,
-    extra: tuple[str, ...] = ("op",),
-    salted: bool = False,
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Narrow winner selection: one row per key carrying the max
-    ``(seq, part)`` plus the winning row's ``extra`` columns.
-
-    The scale-defining trick (late materialization): ONLY ``(key,
-    *order_cols, *extra)`` — a few dozen bytes/row — enter the dedup
-    shuffle. The wide token payload is recovered afterwards by semi-joining
-    these keys back to the columnar source scan, so a 10^10-event batch
-    shuffles ~40 B/event instead of the full multi-KB token arrays. This
-    replaces shuffling the whole payload through ``latest_by_key`` (round-1
-    scaling bottleneck: the wide shuffle + spill was memory-bandwidth-bound
-    and stopped scaling past ~8 cores).
-    """
-    narrow = df.select(key, *order_cols, *extra)
-    ord_struct = F.struct(*[F.col(c) for c in order_cols])
-    pick = F.struct(*order_cols, *extra)
-    if salted:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets))
-        phase1 = (
-            narrow.withColumn("_salt", salt)
-            .groupBy(key, "_salt")
-            .agg(F.max_by(pick, ord_struct).alias("_w"))
-            .select(key, "_w.*")
-        )
-        agg = phase1.groupBy(key).agg(F.max_by(pick, ord_struct).alias("_w"))
-    else:
-        agg = narrow.groupBy(key).agg(F.max_by(pick, ord_struct).alias("_w"))
-    return agg.select(key, "_w.*")
-
 
 # packed winner-key bit layout: [ seq:42 | part:16 | op:4 ] — max() over this
 # long IS lexicographic max over (seq, part), with op riding in the low bits
@@ -149,12 +69,7 @@ def unpack_order(pk):
     return seq, part, op
 
 
-def winner_keys_packed(
-    df: DataFrame,
-    key: str = "doc_id",
-    salted: bool = False,
-    salt_buckets: int = 32,
-) -> DataFrame:
+def winner_keys_packed(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Narrow winner selection as ONE primitive-long ``max()``.
 
     ``max_by(struct, struct)`` is a TypedImperativeAggregate and runs in
@@ -163,26 +78,16 @@ def winner_keys_packed(
     into a single BIGINT keeps the whole aggregation inside
     whole-stage-codegen HashAggregateExec (mutable primitive buffer,
     map-side partial agg). Unknown ops pack to a NULL key (the op CASE has
-    no otherwise); in optimistic mode this runs over UNvalidated pending
-    rows, and a NULL surviving ``max()`` would unpack to a phantom delete
-    with NULL (seq, part) that the error-key anti-join can never remove —
-    so NULL packed keys are dropped here. A doc whose every event has an
-    unknown op then simply has no winner, which is correct: validation
-    routes all of its events to the error table. Returns ``(key, seq,
-    part, op)`` — one row per key.
+    no otherwise), and a NULL surviving ``max()`` would unpack to a phantom
+    delete with NULL (seq, part) — so NULL packed keys are dropped here.
+    Given unvalidated rows, a doc whose every event has an unknown op then
+    simply has no winner, which is correct: validation routes all of its
+    events to the error table. Returns ``(key, seq, part, op)`` — one row
+    per key.
     """
     pk = packed_order().alias("_pk")
     narrow = df.select(key, pk).filter(F.col("_pk").isNotNull())
-    if salted:
-        salt = F.pmod(F.xxhash64("_pk"), F.lit(salt_buckets))
-        phase1 = (
-            narrow.withColumn("_salt", salt)
-            .groupBy(key, "_salt")
-            .agg(F.max("_pk").alias("_pk"))
-        )
-        agg = phase1.groupBy(key).agg(F.max("_pk").alias("_pk"))
-    else:
-        agg = narrow.groupBy(key).agg(F.max("_pk").alias("_pk"))
+    agg = narrow.groupBy(key).agg(F.max("_pk").alias("_pk"))
     return agg.select(key, *unpack_order(F.col("_pk")))
 
 

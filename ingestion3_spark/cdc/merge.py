@@ -4,14 +4,14 @@ Distributed replacement for the reference's collect-and-broadcast merge
 (``utils/NaraMergeUtil.scala:54-320``): where the reference collects delta
 ids to the driver and filters base with a closure UDF (correct only because
 delta << base), this merge is joins against the NARROW winner-key set
-produced by ``dedup.winner_keys`` —
+produced by ``dedup.winner_keys_packed`` —
 
   classify: winners LEFT JOIN base-keys    -> insert/update/delete/invalid_delete
   apply:    base ANTI JOIN winner-keys ∪ late-materialized upserts
 
-The wide token payload never enters a dedup shuffle: ``changes`` is built by
-the caller as a (broadcast) semi-join of the winner keys back to the
-columnar source scan. Only buckets containing delta keys are read and
+The wide token payload never enters the winner aggregate: ``changes`` is
+built by the caller as a (broadcast) join of the winner keys back to the
+columnar source scan, partitioned by the table's bucket column. Only buckets containing delta keys are read and
 rewritten (manifest-level file pruning), so merge cost scales with |delta| +
 |touched buckets|, not |base|. Classification and the data write are
 INDEPENDENT Spark jobs and run concurrently (FAIR scheduler) — per-batch
@@ -69,10 +69,13 @@ def merge_batch(
     """Apply deduped per-key changes to the table in one transaction.
 
     ``changes``: one (wide) row per doc_id with columns ``(doc_id, op,
-    <payload...>, seq, part)`` — already deduped by the caller.
+    <payload...>, seq, part)`` — already deduped by the caller and
+    hash-partitioned on the table's bucket column, which the writes reuse.
     ``winners``: the PERSISTED narrow winner keys ``(doc_id, seq, part, op,
     __bucket)`` — reused for classification, the base anti-join, and bucket
-    pruning without recomputing anything wide. ``extra_lineage_future``: an
+    pruning without recomputing anything wide. ``broadcast_winners``: False
+    when the winner set is too big to broadcast, which takes the COW
+    shuffle-join fallback. ``extra_lineage_future``: an
     in-flight error-routing job whose per-part counts must land in the same
     atomic commit; it is awaited only after the write jobs are submitted, so
     error routing overlaps the merge write. Op classification recomputes
@@ -84,36 +87,13 @@ def merge_batch(
     data_cols = table.column_names()
     mor = table.merge_mode == "mor"
 
-    import os as _os
-    import time as _time
-    debug = _os.environ.get("I3S_DEBUG_TIMING") == "1"
-    _t0 = _time.perf_counter()
-
-    def _t(label):
-        if debug:
-            print(f"[timing]   merge {label}: {_time.perf_counter() - _t0:.2f}s", flush=True)
-
-    # anti-join strategy: broadcasting a multi-million-entry STRING key set
-    # builds a large hash map single-threaded on the driver — measured
-    # 2-4x slower than a shuffled hash join of the (small) base against the
-    # narrow persisted winners. Broadcast only genuinely small winner sets.
-    win_keys = winners.select(key)
-    if (
-        broadcast_winners
-        and n_winners is not None
-        and n_winners <= int(_os.environ.get("I3S_ANTI_BCAST_MAX", "1000000"))
-    ):
-        win_keys = F.broadcast(win_keys)
-    else:
-        win_keys = win_keys.hint("shuffle_hash")
-
     def classify_job() -> list:
         # narrow columns only: winner keys vs live base keys (token arrays
         # never decoded — live_keys prunes to the key column)
         base_keys = table.live_keys(buckets=touched).withColumn(
             "_matched", F.lit(True)
         )
-        rows = (
+        return (
             winners.select(key, "part", "op")
             .join(base_keys, key, "left")
             .withColumn(
@@ -134,8 +114,6 @@ def merge_batch(
             )
             .collect()
         )
-        _t("classify_agg")
-        return rows
 
     rows_before_total = -1 if mor else sum(e.rows for e in table.live_files())
 
@@ -145,108 +123,59 @@ def merge_batch(
         if mor:
             # merge-on-read: append the deduped changes (upserts + delete
             # tombstones) as delta files — O(delta) write, no base rewrite.
-            # ``changes`` is feed-scan-partitioned (late materialization),
-            # so every task holds rows of EVERY bucket: the no-exchange
-            # fanout path (key_partitioned=True) makes the dynamic-
-            # partition writer sort the wide token payload in each task
-            # and spray tasks×buckets small files — measured 2-3x slower
-            # than paying the one co-locating exchange (same shape as the
-            # COW upsert path; knob kept for bucket-aligned callers).
-            files = table.write_delta_files(
+            # ``changes`` arrives partitioned by ``__bucket`` (replay.py's
+            # dedup exchange), so the fanout write (key_partitioned=True)
+            # sees a few bucket values per task and pays no exchange of
+            # its own.
+            return table.write_delta_files(
                 changes.select(*data_cols, "op", "seq", "part"),
-                key_partitioned=(
-                    _os.environ.get("I3S_MOR_FANOUT", "0") == "1"
-                    # one-exchange mode: the dedup exchange in replay.py is
-                    # already bucket-aligned, so skip the write's own
-                    or _os.environ.get("I3S_ONE_EXCHANGE", "1") == "1"
-                ),
+                key_partitioned=True,
             )
-            _t("delta_write")
-            return files
         # copy-on-write: base rows not touched by delta ∪ upsert payloads.
         upserts = changes.filter(F.col("op") != "delete").select(*data_cols)
         base = table.read(buckets=touched)
-        if _os.environ.get("I3S_COW_SPLIT", "1") == "1" and broadcast_winners:
-            # SPLIT write (round-3 scale design): only the UPSERTS — O(delta)
-            # wide rows — go through the co-locating exchange; base
-            # survivors take a map-side broadcast anti-join and a fanout
-            # write with NO exchange at all. Base-scan tasks are bucket-
-            # aligned (each parquet file belongs to exactly one bucket
-            # dir), so the dynamic-partition writer sees ~1 partition value
-            # per task and the fanout sort penalty (the reason the r2
-            # whole-union fanout lost) vanishes. At 10^10-row scale this is
-            # the difference between shuffling the TABLE and shuffling the
-            # DELTA per merge. Requires broadcastable winners; the huge-
-            # winner fallback below keeps the single-exchange union plan.
+        if broadcast_winners:
+            # SPLIT write (round-3 scale design): base survivors take a
+            # map-side broadcast anti-join and a fanout write with NO
+            # exchange at all. Base-scan tasks are bucket-aligned (each
+            # parquet file belongs to exactly one bucket dir), so the
+            # dynamic-partition writer sees ~1 partition value per task and
+            # the fanout sort penalty (the reason the r2 whole-union fanout
+            # lost) vanishes. The upserts — O(delta) wide rows — arrive
+            # already bucket-partitioned by replay.py's dedup exchange, so
+            # their fanout write pays no second exchange either. At
+            # 10^10-row scale this is the difference between shuffling the
+            # TABLE and shuffling the DELTA per merge.
             with futures.ThreadPoolExecutor(max_workers=2) as wpool:
-                # base-survivor anti-join strategy (A/B knob): 'bcast'
-                # broadcasts the winner keys — no exchange, bucket-aligned
-                # fanout write, but the driver builds a |winners|-entry
-                # string hash map serially (~2s at 3.5M keys); 'shuffle'
-                # pays two small exchanges (wide base + narrow winners)
-                # with zero serial driver time — better when |winners| is
-                # millions and base is comparatively small.
-                if _os.environ.get("I3S_BASE_ANTI", "bcast") == "shuffle":
-                    f_base = wpool.submit(
-                        lambda: table.write_files(
-                            base.select(*data_cols).join(
-                                winners.select(key).hint("shuffle_hash"),
-                                key,
-                                "left_anti",
-                            )
-                        )
+                f_base = wpool.submit(
+                    lambda: table.write_files(
+                        base.select(*data_cols).join(
+                            F.broadcast(winners.select(key)), key, "left_anti"
+                        ),
+                        key_partitioned=True,
                     )
-                else:
-                    f_base = wpool.submit(
-                        lambda: table.write_files(
-                            base.select(*data_cols).join(
-                                F.broadcast(winners.select(key)), key, "left_anti"
-                            ),
-                            key_partitioned=True,
-                        )
-                    )
-                # the dedup exchange (dropDuplicates' hash(key) shuffle)
-                # already co-locates equal keys, so the upsert write can
-                # reuse it as its partitioning (fanout) instead of paying a
-                # second full exchange of the wide delta — knobbed because
-                # the fanout writer's per-task dynamic-partition handling
-                # (sort fallback vs concurrent writers) is storage-profile
-                # dependent; pair with spark.sql.maxConcurrentOutputFileWriters
-                fan = (
-                    _os.environ.get("I3S_SPLIT_UPSERT_FANOUT", "0") == "1"
-                    # one-exchange mode: changes arrive already bucket-
-                    # partitioned (replay.py dedup exchange), so the write
-                    # must NOT pay a second exchange
-                    or _os.environ.get("I3S_ONE_EXCHANGE", "1") == "1"
                 )
                 f_ups = wpool.submit(
-                    lambda: table.write_files(upserts, key_partitioned=fan)
+                    lambda: table.write_files(upserts, key_partitioned=True)
                 )
-                base_files = f_base.result()
-                _t("cow_split base done")
-                ups_files = f_ups.result()
-                _t("cow_split upserts done")
-                files = base_files + ups_files
-            _t("cow_write_split")
-            return files
-        new_data = (
-            base.select(*data_cols)
-            .join(win_keys, key, "left_anti")
-            .unionByName(upserts)
-        )
-        # single-exchange union fallback (huge winner sets): fanout
-        # (key_partitioned=True) measured SLOWER for the union despite
-        # saving an exchange — a union task holds MANY buckets, so Spark's
-        # dynamic-partition write locally sorts every task's rows
+                return f_base.result() + f_ups.result()
+        # winner sets too big to broadcast: broadcasting a multi-million-
+        # entry STRING key set builds a large hash map single-threaded on
+        # the driver (measured 2-4x slower than a shuffled hash join of the
+        # base against the narrow persisted winners), so anti-join by
+        # shuffle and write the union through one co-locating exchange.
+        # Fanout (key_partitioned=True) measured SLOWER for the union
+        # despite saving an exchange — a union task holds MANY buckets, so
+        # Spark's dynamic-partition write locally sorts every task's rows
         # (maxConcurrentOutputFileWriters=0 default) and ~900 small files
         # add writer overhead; the single repartition("__bucket") exchange
         # is cheaper there (+9s vs +3s at 32 cores).
-        files = table.write_files(
-            new_data,
-            key_partitioned=_os.environ.get("I3S_FANOUT", "0") == "1",
+        new_data = (
+            base.select(*data_cols)
+            .join(winners.select(key).hint("shuffle_hash"), key, "left_anti")
+            .unionByName(upserts)
         )
-        _t("cow_write")
-        return files
+        return table.write_files(new_data)
 
     # classification and the data write are independent — run them as
     # concurrent Spark jobs; commit happens only after both (and the error
@@ -256,7 +185,6 @@ def merge_batch(
         f_write = pool.submit(write_job)
         agg = f_classify.result()
         new_files = f_write.result()
-    _t("jobs joined")
 
     lineage_rows = {}
     for r in agg:
@@ -317,7 +245,6 @@ def merge_batch(
         lineage=list(lineage_rows.values()),
         summary=counts,
     )
-    _t("commit")
     if mor:
         # physical file rows include superseded versions + tombstones, so
         # the COW count invariant does not apply; the oracle-equality tests

@@ -38,6 +38,11 @@ CORPUS_FIELDS = [
     Field(4, "source", "string"),
 ]
 
+# Winner sets up to this size are broadcast (late-materialization join,
+# base anti-join, COW split write); larger ones take the shuffle-join
+# fallback in ``apply_batch`` and ``merge_batch``.
+BROADCAST_WINNERS_MAX = 10_000_000
+
 
 @dataclass
 class BatchStats:
@@ -67,8 +72,6 @@ class ReplayEngine:
     # LakeTable is the sandbox implementation
     table: TableAdapter
     error_dir: str | None = None
-    salted_dedup: bool = False
-    salt_buckets: int = 32
     history: list[BatchStats] = field(default_factory=list)
 
     @staticmethod
@@ -88,12 +91,12 @@ class ReplayEngine:
         divide):
 
         * phase 1 (CONCURRENT jobs): winner selection — shuffle only
-          ``(doc_id, seq, part, op)`` packed into one BIGINT, persist the
-          ~|keys| winner set, return per-bucket counts — overlapped with
-          error routing (wide scan -> tiny batch-partitioned write +
-          pruned count-back; mode knob ``I3S_WINNER_MODE``, see inline)
-          and the column-pruned per-part offsets aggregation. events_in /
-          error totals ride along as ``observe()`` metrics.
+          ``(doc_id, seq, part, op)`` packed into one BIGINT over the clean
+          rows, persist the ~|keys| winner set, return per-bucket counts —
+          overlapped with error routing (wide scan -> tiny
+          batch-partitioned write + pruned count-back) and the
+          column-pruned per-part offsets aggregation. events_in / error
+          totals ride along as ``observe()`` metrics.
         * phase 2 (two CONCURRENT jobs): the narrow classify agg and the
           data write. The write late-materializes the wide payload:
           source scan ⋈ broadcast(winner keys) — the wide token arrays
@@ -104,23 +107,19 @@ class ReplayEngine:
 
         Wide-payload bytes shuffled per batch: |winners| rows, not |events|
         (round-1's wide dedup shuffle + DISK_ONLY spill was the scaling
-        bottleneck — memory-bandwidth-bound, flat past ~8 cores).
+        bottleneck — memory-bandwidth-bound, flat past ~8 cores). Concurrent
+        winner selection beat routing errors first (16.07 s vs 16.45 s) and
+        optimistic winners over unvalidated rows (18.54 s) in the round-4
+        interleaved A/B (BENCH.md "Round-4 saturation check").
+
+        ``BatchStats.errors`` is the committed lineage's error total: with
+        an error sink that counts distinct ``(part, seq)``, as
+        ``errors_df`` does.
         """
-        import time
         from concurrent import futures
 
         from pyspark.sql import Observation
         from pyspark.storagelevel import StorageLevel
-
-        debug = os.environ.get("I3S_DEBUG_TIMING") == "1"
-        t0 = time.perf_counter()
-
-        def _t(label):
-            if debug:
-                print(
-                    f"[timing] batch={batch_id} {label}: {time.perf_counter() - t0:.2f}s",
-                    flush=True,
-                )
 
         self.check_compat(events)
         ckpt = self.table.checkpoint()
@@ -149,9 +148,9 @@ class ReplayEngine:
         observed = pending.observe(obs_err, *metric_cols)
         obs_win = Observation()
         clean = pending.observe(obs_win, *metric_cols).filter(~errp)
-        winners = winners_all = None
+        winners = None
         try:
-            with futures.ThreadPoolExecutor(max_workers=3) as pool:
+            with futures.ThreadPoolExecutor(max_workers=2) as pool:
                 # offsets job: Catalyst prunes this scan to the (part, seq)
                 # parquet column chunks — token arrays are never decoded
                 # for checkpoint bookkeeping
@@ -160,107 +159,20 @@ class ReplayEngine:
                     .agg(F.max("seq").alias("hi"))
                     .collect()
                 )
-                _t("plan built")
-                # winner-selection modes, A/B-measured (BENCH.md):
-                #  - concurrent (default): winner agg over the clean rows
-                #    (wide scan re-evaluates has_error) runs CONCURRENTLY
-                #    with error routing; error counts join the commit via a
-                #    future. Best 4N wall AND best scaling ratio — the two
-                #    wide scans overlap.
-                #  - errfirst: route errors, then a tokens-free narrow
-                #    winner scan anti-joins the error keys. Lowest TOTAL
-                #    work (best at small core counts / congested hosts).
-                #  - optimistic: winners over ALL pending concurrently +
-                #    per-errored-doc fixup (for high-error feeds).
-                mode = os.environ.get("I3S_WINNER_MODE", "concurrent")
-                f_err = None
-                if mode in ("errfirst", "optimistic") and self.error_dir is not None:
-                    # these modes call _route_errors (and its obs.get) up
-                    # front — check batch emptiness FIRST so a fully-
-                    # redelivered/empty batch takes the same safe early
-                    # return as the concurrent path (the offsets future is
-                    # re-awaited below; resolved futures are idempotent)
-                    if not f_offsets.result():
-                        stats = BatchStats(batch_id, 0, 0, 0, None)
-                        self.history.append(stats)
-                        return stats
-                if self.error_dir is not None and mode == "errfirst":
-                    # serial errors-first variant (A/B knob): route errors,
-                    # then winner-select over the error-excluded narrow scan
-                    err_by_part, err_keys = self._route_errors(observed, batch_id, obs_err)
-                    _t("error route")
-                    n_err = sum(d["errors"] for d in err_by_part.values())
-                    src = pending.select(key, "seq", "part", "op")
-                    if n_err:
-                        ek = err_keys.select("part", "seq")
-                        if n_err <= 5_000_000:
-                            ek = F.broadcast(ek)
-                        src = src.join(ek, ["part", "seq"], "left_anti")
-                    base_winners = dd.winner_keys_packed(
-                        src, key=key,
-                        salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                    )
-                elif self.error_dir is not None and mode == "optimistic":
-                    # optimistic winner selection runs CONCURRENTLY with
-                    # error routing: winners over ALL pending events from a
-                    # tokens-free narrow scan (no has_error evaluation),
-                    # while the batch's one wide validation scan routes
-                    # errors (observe() metrics ride on it). A doc's
-                    # optimistic winner is wrong only if that exact event
-                    # errored — the fixup below recomputes just those docs
-                    # against the (tiny) error-key set.
-                    win_src = pending.select(key, "seq", "part", "op")
-                    winners_all = dd.winner_keys_packed(
-                        win_src, key=key,
-                        salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                    ).persist(StorageLevel.MEMORY_AND_DISK)
-                    f_wall = pool.submit(winners_all.count)
-                    err_by_part, err_keys = self._route_errors(observed, batch_id, obs_err)
-                    _t("error route")
-                    n_err = sum(d["errors"] for d in err_by_part.values())
-                    f_wall.result()
-                    _t("optimistic winners")
-                    if n_err:
-                        ek = err_keys.select("part", "seq")
-                        if n_err <= 5_000_000:
-                            ek = F.broadcast(ek)
-                        good = winners_all.join(ek, ["part", "seq"], "left_anti")
-                        bad_keys = (
-                            winners_all.join(ek, ["part", "seq"], "left_semi")
-                            .select(key)
-                        )
-                        redo = dd.winner_keys_packed(
-                            win_src.join(F.broadcast(bad_keys), key, "left_semi")
-                            .join(ek, ["part", "seq"], "left_anti"),
-                            key=key,
-                            salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                        )
-                        base_winners = good.unionByName(redo)
-                    else:
-                        base_winners = winners_all
-                else:
-                    # concurrent mode (and the no-error-sink fallback):
-                    # winners over the clean rows; the error-routing job (if
-                    # any) runs in a parallel thread and its per-part counts
-                    # join the atomic commit via the future
-                    err_by_part, n_err = {}, None  # from obs
-                    if self.error_dir is not None:
-                        f_err = pool.submit(
-                            self._route_errors_counts, observed, batch_id, obs_err
-                        )
-                    base_winners = dd.winner_keys_packed(
-                        clean.select(key, "seq", "part", "op"), key=key,
-                        salted=self.salted_dedup, salt_buckets=self.salt_buckets,
-                    )
+                # winners over the clean rows (the wide scan re-evaluates
+                # the error predicate); the error-routing job (if any) runs
+                # in a parallel thread and its per-part counts join the
+                # atomic commit via the future
+                err_by_part, f_err = {}, None
+                if self.error_dir is not None:
+                    f_err = pool.submit(self._route_errors, observed, batch_id, obs_err)
                 winners = (
-                    base_winners
+                    dd.winner_keys_packed(clean.select(key, "seq", "part", "op"), key=key)
                     .withColumn("__bucket", self.table.bucket_expr())
                     .persist(StorageLevel.MEMORY_AND_DISK)
                 )
                 bucket_rows = winners.groupBy("__bucket").count().collect()
-                _t("winners agg")
                 offset_rows = f_offsets.result()
-                _t("phase1 errors+winners+offsets")
                 if not offset_rows:
                     # fully-redelivered/empty batch: return BEFORE touching
                     # Observation.get — AQE's empty-relation propagation
@@ -273,23 +185,21 @@ class ReplayEngine:
                 touched = {int(r["__bucket"]) for r in bucket_rows}
                 n_winners = sum(int(r["count"]) for r in bucket_rows)
                 # metrics from the observation whose single consuming job
-                # has definitely completed in this mode
-                if n_err is not None:
-                    events_in = int(obs_err.get["events_in"] or 0)
-                elif n_winners > 0:
+                # has definitely completed
+                if n_winners > 0:
                     metrics = obs_win.get
                     events_in = int(metrics["events_in"] or 0)
                     n_err = int(metrics["n_err"] or 0)
                     if n_err and f_err is None:
                         err_by_part[(batch_id, -1)] = {"errors": n_err}
                 else:
-                    # concurrent-mode poison batch: pending is non-empty but
-                    # every event failed validation, so obs_win's single
-                    # consuming job (the winner agg) ran on an empty-after-
-                    # filter plan — the same AQE empty-relation/CollectMetrics
-                    # condition as the empty-batch return above. Derive the
-                    # totals from the error-routing write (writes never
-                    # collapse) or a plain count instead of touching obs_win.
+                    # poison batch: pending is non-empty but every event
+                    # failed validation, so obs_win's single consuming job
+                    # (the winner agg) ran on an empty-after-filter plan —
+                    # the same AQE empty-relation/CollectMetrics condition
+                    # as the empty-batch return above. Derive the totals
+                    # from the error-routing write (writes never collapse)
+                    # or a plain count instead of touching obs_win.
                     if f_err is not None:
                         err_by_part = f_err.result() or {}
                         f_err = None
@@ -312,15 +222,13 @@ class ReplayEngine:
                 # is EXACT under the feed's (part, seq)-uniqueness contract.
                 # Surviving rows per key are byte-identical duplicate
                 # re-deliveries of that key's winner (at-least-once feed),
-                # so a plain dropDuplicates([key]) — a |winners|-row First
+                # so a plain dropDuplicates — a |winners|-row First
                 # aggregation — finishes the dedup deterministically
                 # (measured 2.3x cheaper than a wide max_by, which runs in
-                # ObjectHashAggregate). Beyond the cap: shuffle join on the
-                # narrow keys (at 10^10-event scale, pair with a bucketed
-                # base layout).
-                bcast = n_winners <= int(
-                    os.environ.get("I3S_BROADCAST_WINNERS_MAX", "10000000")
-                )
+                # ObjectHashAggregate). Beyond BROADCAST_WINNERS_MAX:
+                # shuffle join on the narrow keys (at 10^10-event scale,
+                # pair with a bucketed base layout).
+                bcast = n_winners <= BROADCAST_WINNERS_MAX
                 # (seq, part) packed into one long IS the join key: the
                 # feed's (part, seq)-uniqueness contract (exact byte-
                 # identical redeliveries only) makes a single-long equi-join
@@ -357,7 +265,7 @@ class ReplayEngine:
                     # would attach a foreign key's payload to the winner.
                     # I3S_DEBUG=1 re-verifies the key per joined row (one
                     # extra broadcast string column + an assert_true) —
-                    # off on the hot path, on in the property tests.
+                    # off on the hot path, on in tests/test_poison_and_errors.py.
                     debug = os.environ.get("I3S_DEBUG", "0") == "1"
                     wcols = [pk2.alias("_wpk")] + (
                         [F.col(key).alias("_wkey")] if debug else []
@@ -392,24 +300,20 @@ class ReplayEngine:
                         [key, "seq", "part"],
                         "inner",
                     )
-                if os.environ.get("I3S_ONE_EXCHANGE", "1") == "1":
-                    # one-exchange variant: repartition by the WRITE's own
-                    # bucket column first, then dedup on (bucket, key) —
-                    # hashpartitioning([__bucket]) is a subset of the
-                    # dedup's clustering keys, so Catalyst inserts NO
-                    # second exchange, and the bucketed write can take the
-                    # fanout path (~2 bucket values per task) instead of
-                    # its own full exchange of the wide payload. The
-                    # (bucket, key) groups equal the key groups because
-                    # bucket = f(key).
-                    changes = (
-                        delta.withColumn("__bucket", self.table.bucket_expr())
-                        .repartition(F.col("__bucket"))
-                        .dropDuplicates(["__bucket", key])
-                        .drop("__bucket")
-                    )
-                else:
-                    changes = delta.dropDuplicates([key])
+                # one exchange: repartition by the WRITE's own bucket column
+                # first, then dedup on (bucket, key) — hashpartitioning
+                # ([__bucket]) is a subset of the dedup's clustering keys,
+                # so Catalyst inserts NO second exchange, and the bucketed
+                # write takes the fanout path (~2 bucket values per task)
+                # instead of its own full exchange of the wide payload. The
+                # (bucket, key) groups equal the key groups because
+                # bucket = f(key).
+                changes = (
+                    delta.withColumn("__bucket", self.table.bucket_expr())
+                    .repartition(F.col("__bucket"))
+                    .dropDuplicates(["__bucket", key])
+                    .drop("__bucket")
+                )
 
                 result = merge_batch(
                     self.table,
@@ -424,31 +328,20 @@ class ReplayEngine:
                     clean_count=events_in - n_err,
                     n_winners=n_winners,
                 )
-                _t("merge")
-            stats = BatchStats(batch_id, events_in, n_err, n_winners, result)
+            errors = sum(r["errors"] for r in result.lineage)
+            stats = BatchStats(batch_id, events_in, errors, n_winners, result)
             self.history.append(stats)
             return stats
         finally:
             if winners is not None:
                 winners.unpersist()
-            if winners_all is not None:
-                winners_all.unpersist()
 
-    def _route_errors_counts(self, observed: DataFrame, batch_id: int, obs) -> dict:
-        """Thread target for concurrent mode: error write + per-part counts
-        only (the error-key DataFrame is not needed when winner selection
-        filters on has_error itself)."""
-        return self._route_errors(observed, batch_id, obs)[0]
-
-    def _route_errors(self, observed: DataFrame, batch_id: int, obs) -> tuple[dict, DataFrame | None]:
+    def _route_errors(self, observed: DataFrame, batch_id: int, obs) -> dict:
         """Error-table write (MessageCollector report analog) + per-part
-        counts for lineage. At-least-once — ``errors_df`` dedups by (part,
-        seq). The write is partitioned by ``batch_id`` so the count-back
-        read prunes to THIS batch's files (O(batch errors), not O(all
-        errors ever written)). Returns (per-part counts keyed (batch_id,
-        part), lazy DataFrame of this batch's deduped error (part, seq)
-        keys — the winner-selection anti-join input)."""
-        err_by_part: dict[tuple, dict] = {}
+        counts for lineage, keyed ``(batch_id, part)``. At-least-once —
+        counts and ``errors_df`` dedup by (part, seq). The write is
+        partitioned by ``batch_id`` so the count-back read prunes to THIS
+        batch's files (O(batch errors), not O(all errors ever written))."""
         err_path = self._err_path()
         (
             val.validate_events(observed.filter(val.error_predicate()))
@@ -461,15 +354,15 @@ class ReplayEngine:
             .parquet(err_path)
         )
         if int(obs.get["n_err"] or 0) == 0:
-            return err_by_part, None
-        err_keys = (
+            return {}
+        rows = (
             self.spark.read.parquet(err_path)
             .filter(F.col("batch_id") == batch_id)
             .dropDuplicates(["part", "seq"])
+            .groupBy("part").agg(F.count("*").alias("n"))
+            .collect()
         )
-        for r in err_keys.groupBy("part").agg(F.count("*").alias("n")).collect():
-            err_by_part[(batch_id, int(r["part"]))] = {"errors": int(r["n"])}
-        return err_by_part, err_keys
+        return {(batch_id, int(r["part"])): {"errors": int(r["n"])} for r in rows}
 
     # ------------------------------------------------------------ full replay
     def replay(
@@ -552,44 +445,37 @@ class ReplayEngine:
             )
 
     def _next_batch_id(self) -> int:
-        ids = [s.batch_id for s in self.table.snapshots() if s.batch_id is not None]
-        return (max(ids) + 1) if ids else 0
+        # every commit carries the highest batch id so far forward (as it
+        # does the checkpoint), so expiry cannot make an id come round again
+        snaps = self.table.snapshots()
+        last = snaps[-1].last_batch_id if snaps else None
+        return 0 if last is None else last + 1
 
     def _err_path(self) -> str:
-        """Current (v2, batch_id-partitioned) error sink directory.
-
-        Versioned because the round-1 layout wrote ``batch_id`` as a DATA
-        column into ``errors/`` while v2 writes it as a PARTITION column —
-        mixing the two in one parquet root makes partition inference clash
-        with the embedded column. Legacy dirs stay readable via
-        ``errors_df``; new writes never touch them.
-        """
+        """Error sink directory, partitioned by ``batch_id``. Named
+        ``errors_v2`` because an earlier layout wrote ``batch_id`` as a DATA
+        column into ``errors/``; mixing the two in one parquet root makes
+        partition inference clash with the embedded column."""
         return os.path.join(self.error_dir, "errors_v2")
 
     def errors_df(self) -> DataFrame:
-        """Error-table reader (v2 partitioned layout ∪ legacy v1 layout).
+        """Error-table reader.
 
         The error sink is an append-only parquet written BEFORE the merge
         commit, so a crash between error-write and commit leaves duplicate
         rows on retry (at-least-once diagnostics — observed under SIGKILL).
         Reads therefore dedup on the unique delivery key (part, seq).
         """
-        cols = [
-            F.col("batch_id").cast("long").alias("batch_id"),
-            "part", "seq", "doc_id", "op", "messages",
-        ]
-        parts = []
-        if self.error_dir:
-            for sub in ("errors_v2", "errors"):
-                p = os.path.join(self.error_dir, sub)
-                if os.path.exists(p):
-                    parts.append(self.spark.read.parquet(p).select(*cols))
-        if not parts:
+        if not self.error_dir or not os.path.exists(self._err_path()):
             return self.spark.createDataFrame(
                 [], "batch_id long, part int, seq long, doc_id string, op string, "
                     "messages " + val.MESSAGE_SCHEMA
             )
-        df = parts[0]
-        for extra in parts[1:]:
-            df = df.unionByName(extra)
-        return df.dropDuplicates(["part", "seq"])
+        return (
+            self.spark.read.parquet(self._err_path())
+            .select(
+                F.col("batch_id").cast("long").alias("batch_id"),
+                "part", "seq", "doc_id", "op", "messages",
+            )
+            .dropDuplicates(["part", "seq"])
+        )

@@ -104,6 +104,9 @@ class Snapshot:
     checkpoint: dict = field(default_factory=dict)  # {part(str): applied_seq(int)}
     batch_id: int | None = None
     lineage: list = field(default_factory=list)  # list of per-part metric dicts
+    # the highest batch id committed so far, carried forward like the
+    # checkpoint so that snapshot expiry never hands out an id again
+    last_batch_id: int | None = None
 
     def to_json(self) -> dict:
         return {
@@ -115,6 +118,7 @@ class Snapshot:
             "checkpoint": self.checkpoint,
             "batch_id": self.batch_id,
             "lineage": self.lineage,
+            "last_batch_id": self.last_batch_id,
         }
 
     @staticmethod
@@ -122,7 +126,7 @@ class Snapshot:
         return Snapshot(
             d["snapshot_id"], d["parent_id"], d["operation"], d["manifest_path"],
             d.get("summary", {}), d.get("checkpoint", {}), d.get("batch_id"),
-            d.get("lineage", []),
+            d.get("lineage", []), d.get("last_batch_id", d.get("batch_id")),
         )
 
 
@@ -392,6 +396,7 @@ class LakeTable:
         ckpt = dict(prev.checkpoint) if prev else {}
         for k, v in (checkpoint or {}).items():
             ckpt[str(k)] = int(v)
+        ids = [i for i in (batch_id, prev.last_batch_id if prev else None) if i is not None]
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=prev.snapshot_id if prev else None,
@@ -401,6 +406,7 @@ class LakeTable:
             checkpoint=ckpt,
             batch_id=batch_id,
             lineage=lineage or [],
+            last_batch_id=max(ids, default=None),
         )
         new_meta = dict(self._meta)
         new_meta["snapshots"] = self._meta["snapshots"] + [snap.to_json()]

@@ -117,6 +117,8 @@ class MemTable:
             ckpt = dict(self._snaps[-1].checkpoint) if self._snaps else {}
             for k, v in (checkpoint or {}).items():
                 ckpt[str(k)] = int(v)
+            last = self._snaps[-1].last_batch_id if self._snaps else None
+            ids = [i for i in (batch_id, last) if i is not None]
             snap = Snapshot(
                 snapshot_id=len(self._snaps) + 1,
                 parent_id=self._snaps[-1].snapshot_id if self._snaps else None,
@@ -126,6 +128,7 @@ class MemTable:
                 checkpoint=ckpt,
                 batch_id=batch_id,
                 lineage=lineage or [],
+                last_batch_id=max(ids, default=None),
             )
             self._snaps.append(snap)
             return snap

@@ -4,17 +4,16 @@ Covers the round-3 hardening (ADVICE r2):
 - a poison batch (every event fails validation) must commit its checkpoint
   and route all events to the error table without touching the winner
   observation (AQE empty-relation / CollectMetrics crash);
-- errfirst/optimistic modes must survive an empty/fully-redelivered batch;
 - a doc whose every event carries an unknown op must NOT be phantom-deleted
-  in optimistic mode (NULL packed winner key);
-- the v2 (batch_id-partitioned) error sink must coexist with a legacy v1
-  error dir (batch_id as data column) instead of corrupting the read.
+  (NULL packed winner key);
+- NULL ops are error-routed, not dropped;
+- ``BatchStats.errors``, the lineage and ``errors_df`` count a redelivered
+  erroring event once.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
-import pytest
 
 from ingestion3_spark.cdc.generator import make_corpus, make_events
 from ingestion3_spark.cdc.oracle import diff_states, replay_oracle, table_state
@@ -47,12 +46,10 @@ def _poison_feed(n=50, n_parts=2) -> pa.Table:
     )
 
 
-@pytest.mark.parametrize("mode", ["concurrent", "errfirst", "optimistic"])
-def test_poison_batch_all_errors(spark, tmp_table_path, tmp_path, monkeypatch, mode):
+def test_poison_batch_all_errors(spark, tmp_table_path, tmp_path):
     """Non-empty batch where EVERY event fails validation: the batch must
     commit (checkpoint advances so errors are not reprocessed), all events
     land in the error table, and the base state is untouched."""
-    monkeypatch.setenv("I3S_WINNER_MODE", mode)
     base = make_corpus(30, seed=11, max_len=16)
     table = _seed_table(spark, tmp_table_path, base)
     eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
@@ -73,10 +70,9 @@ def test_poison_batch_all_errors(spark, tmp_table_path, tmp_path, monkeypatch, m
     )
 
 
-def test_poison_batch_without_error_sink(spark, tmp_table_path, monkeypatch):
-    """Same poison batch, no error_dir configured (concurrent fallback):
-    metrics come from a plain count, the commit still lands."""
-    monkeypatch.delenv("I3S_WINNER_MODE", raising=False)
+def test_poison_batch_without_error_sink(spark, tmp_table_path):
+    """Same poison batch, no error_dir configured: metrics come from a
+    plain count, the commit still lands."""
     base = make_corpus(10, seed=12, max_len=16)
     table = _seed_table(spark, tmp_table_path, base)
     eng = ReplayEngine(spark, table, error_dir=None)
@@ -85,30 +81,10 @@ def test_poison_batch_without_error_sink(spark, tmp_table_path, monkeypatch):
     assert table.read().count() == 10
 
 
-@pytest.mark.parametrize("mode", ["errfirst", "optimistic"])
-def test_empty_batch_in_alt_modes(spark, tmp_table_path, tmp_path, monkeypatch, mode):
-    """Fully-redelivered batch under errfirst/optimistic: the early return
-    must fire BEFORE _route_errors touches its observation."""
-    monkeypatch.setenv("I3S_WINNER_MODE", mode)
-    base = make_corpus(50, seed=13, max_len=16)
-    events = make_events(500, n_base_docs=50, seed=13, n_parts=2, max_len=16)
-    table = _seed_table(spark, tmp_table_path, base)
-    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
-    eng.replay(_spark_df(spark, events), num_batches=1)
-    stats = eng.apply_batch(_spark_df(spark, events), batch_id=9)
-    assert stats.events_in == 0 and stats.changes == 0
-    assert not diff_states(
-        replay_oracle(base, events),
-        table_state([r.asDict() for r in table.read().collect()]),
-    )
-
-
-def test_unknown_op_doc_not_phantom_deleted(spark, tmp_table_path, tmp_path, monkeypatch):
-    """Optimistic mode selects winners over UNvalidated rows; a doc whose
-    only event has an unknown op packs to a NULL winner key. It must be
-    dropped from winner selection (all its events are error-routed), NOT
-    unpacked into a phantom delete of the doc's live base row."""
-    monkeypatch.setenv("I3S_WINNER_MODE", "optimistic")
+def test_unknown_op_doc_not_phantom_deleted(spark, tmp_table_path, tmp_path):
+    """A doc whose only event has an unknown op packs to a NULL winner key.
+    Its event is error-routed, and the doc's live base row must survive,
+    NOT be unpacked into a phantom delete."""
     base = make_corpus(20, seed=14, max_len=16)
     tok = pa.array([[1, 2, 3]] * 3, pa.list_(pa.int32()))
     feed = pa.table(
@@ -134,42 +110,13 @@ def test_unknown_op_doc_not_phantom_deleted(spark, tmp_table_path, tmp_path, mon
     assert state["doc-00000002"] == ((1, 2, 3), 3, "s1")
 
 
-def test_legacy_error_dir_coexists(spark, tmp_table_path, tmp_path):
-    """A pre-existing round-1 layout (batch_id as DATA column in errors/)
-    must stay readable alongside new v2 partitioned writes."""
-    import os
-
-    from ingestion3_spark.cdc import validate as val
-
-    err_root = tmp_path / "err"
-    # legacy v1 row: batch_id embedded as a data column, empty messages
-    legacy = spark.sql(
-        "select cast(0 as long) batch_id, cast(0 as int) part, cast(999 as long) seq, "
-        "'docA' doc_id, 'insert' op, cast(array() as " + val.MESSAGE_SCHEMA + ") messages"
-    )
-    legacy.write.parquet(str(err_root / "errors"))
-
-    base = make_corpus(10, seed=15, max_len=16)
-    table = _seed_table(spark, tmp_table_path, base)
-    eng = ReplayEngine(spark, table, error_dir=str(err_root))
-    stats = eng.apply_batch(_spark_df(spark, _poison_feed(10)), batch_id=3)
-    assert stats.errors == 10
-    df = eng.errors_df()
-    assert df.count() == 11  # 10 new v2 rows + 1 legacy row
-    assert os.path.exists(str(err_root / "errors_v2"))
-
-
-@pytest.mark.parametrize("mode", ["concurrent", "errfirst", "optimistic"])
-def test_null_op_routes_to_errors_not_dropped(
-    spark, tmp_table_path, tmp_path, monkeypatch, mode
-):
+def test_null_op_routes_to_errors_not_dropped(spark, tmp_table_path, tmp_path):
     """NULL op must classify as an unknown-op ERROR (round-3 advisory): the
     old three-valued error_predicate() made filter(pred) and filter(~pred)
     BOTH drop the row — it vanished silently while the checkpoint advanced
     past its seq, and clean_count overcounted. Now the predicate is
     NULL-definite: the row lands in the error table, the event/error
     counters reconcile, and the doc's base row is untouched."""
-    monkeypatch.setenv("I3S_WINNER_MODE", mode)
     base = make_corpus(20, seed=17, max_len=16)
     tok = pa.array([[5, 6], None, [7, 8]], pa.list_(pa.int32()))
     feed = pa.table(
@@ -196,6 +143,38 @@ def test_null_op_routes_to_errors_not_dropped(
     assert "doc-00000000" in state  # base row survives the NULL-op event
     assert "doc-00000001" in state
     assert state["doc-00000002"] == ((7, 8), 2, "s1")
+
+
+def test_redelivered_error_counts_once(spark, tmp_table_path, tmp_path):
+    """An erroring insert delivered twice in one batch (same part and seq)
+    is one error: BatchStats, the committed lineage and the error table
+    all count distinct (part, seq)."""
+    from ingestion3_spark.cdc.merge import lineage_df
+
+    base = make_corpus(20, seed=19, max_len=16)
+    feed = pa.table(
+        {
+            "seq": pa.array([1, 2, 2, 3], pa.int64()),
+            "part": pa.array([0, 0, 0, 0], pa.int32()),
+            # seq 2 is an insert with no tokens, delivered twice
+            "op": pa.array(["update", "insert", "insert", "update"]),
+            "doc_id": pa.array(
+                ["doc-00000001", "doc-new", "doc-new", "doc-00000002"]),
+            "tokens": pa.array([[1], None, None, [2]], pa.list_(pa.int32())),
+            "n_tok": pa.array([1, None, None, 1], pa.int32()),
+            "source": pa.array(["s1", "s1", "s1", "s1"]),
+        }
+    )
+    table = _seed_table(spark, tmp_table_path, base)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
+    stats = eng.apply_batch(_spark_df(spark, feed), batch_id=0)
+    assert stats.events_in == 4 and stats.changes == 2
+    lineage_errors = lineage_df(table).agg({"errors": "sum"}).collect()[0][0]
+    assert stats.errors == eng.errors_df().count() == lineage_errors == 1
+    assert not diff_states(
+        replay_oracle(base, feed),
+        table_state([r.asDict() for r in table.read().collect()]),
+    )
 
 
 def test_replay_with_debug_key_verification(

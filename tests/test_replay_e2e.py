@@ -110,11 +110,11 @@ def test_empty_base_bootstrap(spark, tmp_table_path, tmp_path):
 
 
 def test_skewed_feed(spark, tmp_table_path, tmp_path):
-    """Zipf hot-key feed with salted dedup enabled."""
+    """Zipf hot-key feed: the partial winner aggregate handles hot keys."""
     base = make_corpus(200, seed=3, max_len=32)
     events = make_events(3000, n_base_docs=200, seed=3, n_parts=4, max_len=32, skew=True)
     table = _seed_table(spark, tmp_table_path, base, num_buckets=4)
-    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"), salted_dedup=True)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
     eng.replay(_spark_df(spark, events), num_batches=2)
     _assert_state_matches(table, replay_oracle(base, events))
 
@@ -131,3 +131,57 @@ def test_lineage_reconciliation(spark, tmp_table_path, tmp_path, fixtures):
         )
     # invalid deletes were classified, not applied
     assert sum(s.merge.counts["invalid_deletes"] for s in stats) > 0
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_non_broadcast_fallback_matches_oracle(
+    spark, tmp_table_path, tmp_path, fixtures, monkeypatch, merge_mode
+):
+    """Winner sets above BROADCAST_WINNERS_MAX take the shuffle-join
+    late materialization and, on COW, the single-exchange union write."""
+    from ingestion3_spark.cdc import replay
+
+    monkeypatch.setattr(replay, "BROADCAST_WINNERS_MAX", 0)
+    seen = []
+    merge_batch = replay.merge_batch
+
+    def spy(*args, **kwargs):
+        seen.append(kwargs["broadcast_winners"])
+        return merge_batch(*args, **kwargs)
+
+    monkeypatch.setattr(replay, "merge_batch", spy)
+    base, events = fixtures
+    table = ReplayEngine.create_table(
+        spark, tmp_table_path, num_buckets=8, merge_mode=merge_mode)
+    table.commit("append", add_files=table.write_files(_spark_df(spark, base)))
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
+    stats = eng.replay(_spark_df(spark, events), num_batches=2)
+    assert seen == [False, False]
+    assert sum(s.merge.counts["invalid_deletes"] for s in stats) > 0
+    # superseded and redelivered events were dropped by deduplication
+    assert sum(r["dedup_dropped"] for s in stats for r in s.merge.lineage) > 0
+    _assert_state_matches(table, replay_oracle(base, events))
+
+
+def test_batch_ids_increase_across_expiry(spark, tmp_table_path, tmp_path):
+    """Batch ids survive maintenance + aggressive expiry: after a compaction
+    and expire_snapshots(keep_last=1) only a batch-less maintenance
+    snapshot is retained, yet the next batch (also after a reload) must not
+    reuse an id."""
+    base = make_corpus(100, seed=9, max_len=16)
+    events = make_events(900, n_base_docs=100, seed=9, n_parts=2, max_len=16)
+    table = _seed_table(spark, tmp_table_path, base, num_buckets=4)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
+    df = _spark_df(spark, events)
+    ids = []
+    for lo, hi in ((0, 300), (300, 600)):
+        ids += [s.batch_id for s in eng.replay(
+            df.filter(f"seq > {lo} and seq <= {hi}"), num_batches=1)]
+        assert table.compact() > 0
+        table.expire_snapshots(keep_last=1)
+        assert table.snapshots()[-1].batch_id is None
+    table2 = LakeTable.load(spark, tmp_table_path)
+    eng2 = ReplayEngine(spark, table2, error_dir=str(tmp_path / "err"))
+    ids += [s.batch_id for s in eng2.replay(df, num_batches=1)]
+    assert ids == sorted(set(ids)), ids
+    _assert_state_matches(table2, replay_oracle(base, events))

@@ -45,12 +45,7 @@ def one_replay(spark, events, work, cores, n_base, num_batches, tag):
             write_fixture(base_pq, make_corpus(n_base, seed=42, max_len=128))
         files = table.write_files(spark.read.parquet(base_pq))
         table.commit("append", add_files=files)
-    eng = ReplayEngine(
-        spark, table, error_dir=err_dir,
-        # skew-evidence knob (tools/ab_replay.py): two-phase salted dedup
-        # vs the default single partial-agg (see BENCH.md skew section)
-        salted_dedup=os.environ.get("I3S_SALTED") == "1",
-    )
+    eng = ReplayEngine(spark, table, error_dir=err_dir)
     t0 = time.perf_counter()
     eng.replay(events, num_batches=num_batches)
     if os.environ.get("I3S_MOR_COMPACT") == "1":
@@ -139,8 +134,8 @@ def _run(cores, events_path, n_base, num_batches, work, reps, ballast) -> int:
             "spark.sql.parquet.compression.codec": os.environ.get(
                 "I3S_PARQUET_CODEC", "uncompressed"
             ),
-            # >0 enables sortless dynamic-partition fanout writes (pair
-            # with I3S_SPLIT_UPSERT_FANOUT=1); 0 = Spark default (sort)
+            # >0 enables sortless dynamic-partition fanout writes; 0 =
+            # Spark default (sort)
             "spark.sql.maxConcurrentOutputFileWriters": os.environ.get(
                 "I3S_MAX_WRITERS", "0"
             ),
