@@ -29,7 +29,7 @@ from ingestion3_spark.cdc import dedup as dd
 from ingestion3_spark.cdc import validate as val
 from ingestion3_spark.cdc.merge import MergeResult, merge_batch
 from ingestion3_spark.lakehouse.adapter import TableAdapter
-from ingestion3_spark.lakehouse.table import Field, LakeTable
+from ingestion3_spark.lakehouse.table import BROADCAST_WINNERS_MAX, Field, LakeTable
 
 CORPUS_FIELDS = [
     Field(1, "doc_id", "string"),
@@ -38,10 +38,13 @@ CORPUS_FIELDS = [
     Field(4, "source", "string"),
 ]
 
-# Winner sets up to this size are broadcast (late-materialization join,
-# base anti-join, COW split write); larger ones take the shuffle-join
-# fallback in ``apply_batch`` and ``merge_batch``.
-BROADCAST_WINNERS_MAX = 10_000_000
+# Error-sink columns as written (``batch_id`` is the partition column), so
+# reads of the sink pass a schema and start no inference job.
+_ERR_COLS = (
+    ("part", "int"), ("seq", "bigint"), ("doc_id", "string"), ("op", "string"),
+    ("messages", val.MESSAGE_SCHEMA),
+)
+_ERR_SCHEMA = ", ".join(f"{c} {t}" for c, t in _ERR_COLS)
 
 
 @dataclass
@@ -347,7 +350,7 @@ class ReplayEngine:
             val.validate_events(observed.filter(val.error_predicate()))
             .select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
-                "part", "seq", "doc_id", "op", "messages",
+                *(F.col(c).cast(t).alias(c) for c, t in _ERR_COLS),
             )
             .write.mode("append")
             .partitionBy("batch_id")
@@ -355,9 +358,11 @@ class ReplayEngine:
         )
         if int(obs.get["n_err"] or 0) == 0:
             return {}
+        # this batch's partition only: listing the sink root would be
+        # O(batches) per batch
         rows = (
-            self.spark.read.parquet(err_path)
-            .filter(F.col("batch_id") == batch_id)
+            self.spark.read.schema(_ERR_SCHEMA)
+            .parquet(os.path.join(err_path, f"batch_id={batch_id}"))
             .dropDuplicates(["part", "seq"])
             .groupBy("part").agg(F.count("*").alias("n"))
             .collect()
@@ -466,16 +471,11 @@ class ReplayEngine:
         rows on retry (at-least-once diagnostics — observed under SIGKILL).
         Reads therefore dedup on the unique delivery key (part, seq).
         """
+        schema = "batch_id bigint, " + _ERR_SCHEMA
         if not self.error_dir or not os.path.exists(self._err_path()):
-            return self.spark.createDataFrame(
-                [], "batch_id long, part int, seq long, doc_id string, op string, "
-                    "messages " + val.MESSAGE_SCHEMA
-            )
+            return self.spark.createDataFrame([], schema)
         return (
-            self.spark.read.parquet(self._err_path())
-            .select(
-                F.col("batch_id").cast("long").alias("batch_id"),
-                "part", "seq", "doc_id", "op", "messages",
-            )
+            self.spark.read.schema(schema).parquet(self._err_path())
+            .select("batch_id", *(c for c, _ in _ERR_COLS))
             .dropDuplicates(["part", "seq"])
         )

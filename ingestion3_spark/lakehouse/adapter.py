@@ -42,10 +42,10 @@ Member                    Iceberg binding
                           metadata table (batch lineage = summary props).
 ``read``                  snapshot scan: ``spark.read.format('iceberg')
                           .option('snapshot-id', ...)``; bucket pruning via
-                          a ``system.bucket`` predicate; MOR delta
-                          reconciliation is Iceberg's own positional/
-                          equality-delete read path — the engine's
-                          _reconcile aggregate disappears.
+                          a ``system.bucket`` predicate; MOR deltas apply
+                          through Iceberg's own positional/equality-delete
+                          read path, the scan-time step LakeTable's
+                          broadcast anti-join (``_scan``) mirrors.
 ``live_keys``             the same snapshot scan projected to the key
                           column only (column pruning reaches the parquet
                           footer, token arrays never decode) — used by the

@@ -37,6 +37,7 @@ merge + side-file manifests (``utils/NaraMergeUtil.scala:178-236``,
 from __future__ import annotations
 
 import json
+import posixpath
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
@@ -179,25 +180,36 @@ class IcebergAdapter:
         )
 
     def snapshots(self) -> list["Snapshot"]:
+        """The snapshot log with the engine's summary properties parsed.
+        ``last_batch_id`` is the commit's carried-forward
+        ``cdc.last-batch-id``, or the highest id seen so far in the log for
+        snapshots the engine did not write (maintenance procedures)."""
         from ingestion3_spark.lakehouse.table import Snapshot
 
+        def opt_int(v):
+            return None if v is None else int(v)
+
         rows = self._need(self.snapshots_sql(), "snapshot log read").collect()
-        return [
-            Snapshot(
+        out, last = [], None
+        for r in rows:
+            summary = dict(r["summary"] or {})
+            batch_id = opt_int(summary.get("cdc.batch-id"))
+            ids = [i for i in (last, batch_id, opt_int(summary.get("cdc.last-batch-id")))
+                   if i is not None]
+            last = max(ids, default=None)
+            out.append(Snapshot(
                 snapshot_id=r["snapshot_id"], parent_id=r["parent_id"],
                 operation=r["operation"], manifest_path="",
-                summary=dict(r["summary"] or {}),
+                summary=summary,
                 checkpoint={
                     int(k): int(v)
-                    for k, v in json.loads(
-                        (r["summary"] or {}).get("cdc.offsets", "{}")
-                    ).items()
+                    for k, v in json.loads(summary.get("cdc.offsets", "{}")).items()
                 },
-                batch_id=(r["summary"] or {}).get("cdc.batch-id"),
-                lineage=json.loads((r["summary"] or {}).get("cdc.lineage", "[]")),
-            )
-            for r in rows
-        ]
+                batch_id=batch_id,
+                lineage=json.loads(summary.get("cdc.lineage", "[]")),
+                last_batch_id=last,
+            ))
+        return out
 
     # -- scan ---------------------------------------------------------------------
     def _scan_sql(self, select: str, snapshot_id: int | None,
@@ -222,9 +234,9 @@ class IcebergAdapter:
         snapshot_id: int | None = None,
         buckets: "set[int] | None" = None,
     ) -> "DataFrame":
-        """Snapshot scan (time travel via ``VERSION AS OF``); MOR delta
-        reconciliation is Iceberg's own positional/equality-delete read
-        path — LakeTable's ``_reconcile`` aggregate does not exist here."""
+        """Snapshot scan (time travel via ``VERSION AS OF``); MOR deltas
+        apply through Iceberg's own positional/equality-delete read path,
+        the scan-time step LakeTable's ``_scan`` anti-join mirrors."""
         return self._need(
             self._scan_sql("*", snapshot_id, buckets), "table scan"
         )
@@ -251,7 +263,7 @@ class IcebergAdapter:
             FileEntry(
                 path=r["file_path"], bucket=int(r["bucket"]),
                 rows=int(r["record_count"]), schema_version=0,
-                batch_id=None,
+                batch_dir=posixpath.dirname(r["file_path"]),
                 # Iceberg content codes: 0=data, 1=position deletes,
                 # 2=equality deletes — both delete kinds are delta layers
                 kind="base" if r["content"] == 0 else "delta",
@@ -312,11 +324,15 @@ class IcebergAdapter:
     def commit_properties(
         self,
         checkpoint: dict[int, int] | None = None,
-        batch_id: str | None = None,
+        batch_id: int | None = None,
         lineage: list | None = None,
+        last_batch_id: int | None = None,
     ) -> dict[str, str]:
         """Snapshot summary properties carrying the engine's exactly-once
-        state — attached to the SAME snapshot the MERGE creates."""
+        state — attached to the SAME snapshot the MERGE creates.
+        ``cdc.last-batch-id`` carries the highest batch id committed so far
+        forward (``last_batch_id`` is the previous snapshot's), so snapshot
+        expiry never hands an id out again."""
         props = {}
         if checkpoint is not None:
             props["cdc.offsets"] = json.dumps(
@@ -324,6 +340,9 @@ class IcebergAdapter:
             )
         if batch_id is not None:
             props["cdc.batch-id"] = str(batch_id)
+        ids = [i for i in (batch_id, last_batch_id) if i is not None]
+        if ids:
+            props["cdc.last-batch-id"] = str(max(ids))
         if lineage is not None:
             props["cdc.lineage"] = json.dumps(lineage, sort_keys=True)
         return props
@@ -340,10 +359,13 @@ class IcebergAdapter:
         — a Java-API wrapper, not SQL, so dry-run records the MERGE text
         plus a comment line carrying the rendered property map.
         """
+        # dry-run cannot read the log, so it carries no earlier id forward
+        snaps = [] if self.dry_run else self.snapshots()
         props = self.commit_properties(
             checkpoint=kwargs.get("checkpoint"),
             batch_id=kwargs.get("batch_id"),
             lineage=kwargs.get("lineage"),
+            last_batch_id=snaps[-1].last_batch_id if snaps else None,
         )
         sql = self.merge_into_sql(source_view)
         self.statements.append(

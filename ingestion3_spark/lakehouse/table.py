@@ -45,7 +45,18 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ingestion3_spark.cdc import dedup as dd
+
 FORMAT_VERSION = 1
+
+# Narrow key sets up to this many rows are broadcast; larger ones take a
+# shuffle join. The one limit for the engine: the replay's winner set
+# (cdc/replay.py) and the MOR read's delta key set (``_scan``).
+BROADCAST_WINNERS_MAX = 10_000_000
+
+# the change envelope that delta files carry next to the payload columns
+_SYS_TYPES = {"__op": "string", "__seq": "bigint", "__part": "int"}
+_SYS = tuple(_SYS_TYPES)
 
 # type widening lattice (Iceberg-compatible promotions)
 _WIDEN_OK = {
@@ -285,12 +296,11 @@ class LakeTable:
         one bucket dir (one file per bucket). ``key_partitioned=True`` is
         the fanout-writer path (Iceberg's fanout write analog): the caller
         guarantees the df is already exchange-partitioned on the key or on
-        ``__bucket`` itself (per-key dedup output; bucket-aligned
-        reconcile), so the co-locating repartition is
-        SKIPPED and each task writes the bucket dirs its keys hash into —
-        one less full materialization of the wide payload in the merge's
-        critical path, at the cost of up-to tasks-per-bucket files (bounded
-        by compact()).
+        ``__bucket`` itself (per-key dedup output, delta fold), so the
+        co-locating repartition is SKIPPED and each task writes the bucket
+        dirs its keys hash into — one less full materialization of the wide
+        payload in the merge's critical path, at the cost of up-to
+        tasks-per-bucket files (bounded by compact()).
         """
         sv = schema_version or self.schema_version
         # cast to the declared schema: feeds written before a widen (e.g.
@@ -378,8 +388,12 @@ class LakeTable:
         batch_id: int | None = None,
         lineage: list[dict] | None = None,
         summary: dict | None = None,
+        meta_update: dict | None = None,
     ) -> Snapshot:
-        """Publish a new snapshot atomically (optimistic, single pointer swap)."""
+        """Publish a new snapshot atomically (optimistic, single pointer swap).
+
+        ``meta_update`` lands table-metadata changes (a schema version) in
+        the same metadata version as the snapshot."""
         prev = self.current_snapshot
         live = {e.path: e for e in (self.live_files() if prev else [])}
         for p in remove_paths or set():
@@ -408,7 +422,7 @@ class LakeTable:
             lineage=lineage or [],
             last_batch_id=max(ids, default=None),
         )
-        new_meta = dict(self._meta)
+        new_meta = {**self._meta, **(meta_update or {})}
         new_meta["snapshots"] = self._meta["snapshots"] + [snap.to_json()]
         new_meta["current_snapshot_id"] = sid
         new_meta["version"] = self._meta["version"] + 1
@@ -432,163 +446,112 @@ class LakeTable:
         buckets: set[int] | None = None,
         snapshot_id: int | None = None,
         with_bucket_col: bool = False,
-        bucket_aligned: bool = False,
     ) -> DataFrame:
         """Read live data mapped to the current schema.
 
         ``buckets`` prunes at the manifest level (only matching files are
         listed) AND via the ``__bucket`` partition column, so a merge that
-        touches 3 of 1024 buckets reads 3/1024ths of the data.
+        touches 3 of 1024 buckets reads 3/1024ths of the data. MOR tables
+        apply their delta layer at scan time (see ``_scan``).
+        """
+        cols = self.column_names() + (["__bucket"] if with_bucket_col else [])
+        return self._scan(cols, buckets, snapshot_id)
 
-        ``bucket_aligned=True`` makes the MOR reconcile exchange on
-        ``__bucket`` instead of the key (see ``_reconcile``) so the output
-        is physically partitioned one-bucket-per-task — callers that
-        rewrite the result into the table's bucket layout (compaction)
-        can then skip their own co-locating exchange entirely.
+    def live_keys(self, buckets: set[int] | None = None) -> DataFrame:
+        """Live key set (one column): the read's plan on the narrow
+        columns, so token arrays are never decoded and the merge's
+        insert-vs-update classification stays cheap even with delta layers
+        present."""
+        return self._scan([self.key_column], buckets)
+
+    def _scan(
+        self, cols: list[str], buckets: set[int] | None = None, snapshot_id: int | None = None
+    ) -> DataFrame:
+        """Live rows projected to ``cols``.
+
+        MOR applies the delta layer the way Iceberg applies equality
+        deletes: base rows whose key any delta row names are dropped by a
+        left-anti join against the NARROW delta key set, and the latest
+        delta row per key is added back unless it is a delete. Base files
+        hold one row per key (written by the load or by compaction), so
+        the base side is map-only: the table is never shuffled to read it.
+        The delta key set is broadcast when the manifest's delta row count
+        fits ``BROADCAST_WINNERS_MAX``, else the anti-join shuffles.
+
+        One delta layer (one ``write_delta_files`` call) holds one row per
+        key by construction (the merge writes deduplicated changes, the
+        fold groups by key) and is read as is. Two or more layers pick the
+        latest ``(__seq, __part)`` per key with the replay's narrow
+        packed-long ``max`` over the delta files only; a payload read
+        joins it back to the delta rows (late materialization, as in
+        ``apply_batch``), a key-only read needs only the narrow rows.
         """
         files = self.live_files(snapshot_id)
         if buckets is not None:
             files = [e for e in files if e.bucket in buckets]
-        cur_fields = self.fields()
         if not files:
-            ddl = ", ".join(f"`{f.name}` {f.type}" for f in cur_fields)
-            if with_bucket_col:
-                ddl += ", `__bucket` int"
-            return self.spark.createDataFrame([], schema=ddl)
-
+            types = {f.name: f.type for f in self.fields()} | {"__bucket": "int"}
+            return self.spark.createDataFrame(
+                [], schema=", ".join(f"`{c}` {types[c]}" for c in cols)
+            )
+        key = self.key_column
         base_files = [e for e in files if e.kind == "base"]
         delta_files = [e for e in files if e.kind == "delta"]
+        base = self._union_scan(base_files) if base_files else None
         if not delta_files:
-            out = self._union_scan(base_files, cur_fields)
-        else:
-            out = self._reconcile(
-                base_files, delta_files, cur_fields, bucket_aligned=bucket_aligned
-            )
-        if not with_bucket_col:
-            out = out.drop("__bucket")
-        return out
+            return base.select(*cols)
+        deltas = self._union_scan(delta_files, extra=_SYS)
+        bcast = sum(e.rows for e in delta_files) <= BROADCAST_WINNERS_MAX
+        # the latest narrow (key, __op, __seq, __part) row per key
+        latest = deltas.select(key, *_SYS)
+        if len({e.batch_dir for e in delta_files}) > 1:
+            latest = dd.winner_keys_packed(
+                deltas.select(key, *(F.col(c).alias(c[2:]) for c in _SYS)), key=key
+            ).select(key, *(F.col(c[2:]).alias(c) for c in _SYS))
+            if cols != [key]:
+                narrow = latest.drop("__op")
+                deltas = deltas.join(
+                    F.broadcast(narrow) if bcast else narrow, [key, "__seq", "__part"]
+                )
+        live = (deltas if cols != [key] else latest).filter(F.col("__op") != "delete")
+        live = live.select(*cols)
+        if base is None:
+            return live
+        # the raw scan's keys: a map-only build side (duplicates are harmless
+        # to an anti-join), where the winners' keys would need a shuffle
+        delta_keys = self._union_scan(delta_files).select(key)
+        return (
+            base.join(F.broadcast(delta_keys) if bcast else delta_keys, key, "left_anti")
+            .select(*cols)
+            .unionByName(live)
+        )
 
-    def _union_scan(
-        self, files: list[FileEntry], cur_fields: list[Field], extra: tuple[str, ...] = ()
-    ) -> DataFrame:
-        # group by (schema_version, batch_dir): one parquet listing per batch
+    def _union_scan(self, files: list[FileEntry], extra: tuple[str, ...] = ()) -> DataFrame:
+        """Scan ``files`` mapped to the current schema, plus ``__bucket``
+        and the ``extra`` delta envelope columns. One parquet listing per
+        (schema version, batch dir), each given the schema the table
+        already stores, so building the scan starts no inference job."""
+        cur_fields = self.fields()
         groups: dict[tuple[int, str], list[FileEntry]] = {}
         for e in files:
             groups.setdefault((e.schema_version, e.batch_dir), []).append(e)
         parts: list[DataFrame] = []
         for (sv, batch_dir), entries in sorted(groups.items()):
-            base = os.path.join(self.path, batch_dir)
-            paths = [os.path.join(self.path, e.path) for e in entries]
-            df = self.spark.read.option("basePath", base).parquet(*paths)
-            df = self._map_to_current(df, sv, cur_fields, extra)
-            parts.append(df)
+            ddl = ", ".join(
+                [f"`{f.name}` {f.type}" for f in self.fields(sv)]
+                + [f"`{c}` {_SYS_TYPES[c]}" for c in extra]
+                + ["`__bucket` int"]
+            )
+            df = (
+                self.spark.read.schema(ddl)
+                .option("basePath", os.path.join(self.path, batch_dir))
+                .parquet(*(os.path.join(self.path, e.path) for e in entries))
+            )
+            parts.append(self._map_to_current(df, sv, cur_fields, extra))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-    def _reconcile(
-        self,
-        base_files: list[FileEntry],
-        delta_files: list[FileEntry],
-        cur_fields: list[Field],
-        bucket_aligned: bool = False,
-    ) -> DataFrame:
-        """MOR read: resolve each key to its latest (__seq, __part) row
-        across base (treated as seq -1) and all delta layers, dropping
-        delete tombstones. One hash aggregation on the key — partial
-        aggregation bounds shuffle rows by distinct keys per map task, and
-        bucket pruning applies before the scan, so reconciliation cost
-        follows the buckets actually read.
-
-        ``bucket_aligned=True``: exchange on ``__bucket`` (the table's own
-        layout hash, a pure function of the key) and group by
-        ``(__bucket, key)`` — hash-clustering on a subset of the grouping
-        keys satisfies the aggregation's distribution, so the planner adds
-        NO second exchange, and the output leaves each bucket whole inside
-        one task. Compaction pairs this with the fanout write
-        (``write_files(key_partitioned=True)``) to rewrite the table with
-        ONE wide-payload shuffle instead of two — at 10^10 rows the
-        reconcile+rewrite is the entire compaction cost. Key-skew is
-        unchanged (a hot key maps to one reducer either way); bucket
-        counts must scale with table size (BENCH.md) for task balance."""
-        key = self.key_column
-        payload = [f.name for f in cur_fields if f.name != key]
-        SYS = ("__op", "__seq", "__part")
-        parts = [self._union_scan(delta_files, cur_fields, extra=SYS)]
-        if base_files:
-            parts.append(
-                self._union_scan(base_files, cur_fields)
-                .withColumn("__op", F.lit("upsert"))
-                .withColumn("__seq", F.lit(-1).cast("long"))
-                .withColumn("__part", F.lit(-1).cast("int"))
-            )
-        allr = parts[0]
-        for p in parts[1:]:
-            allr = allr.unionByName(p)
-        if bucket_aligned:
-            w = (
-                allr.repartition("__bucket")
-                .groupBy("__bucket", key)
-                .agg(
-                    F.max_by(
-                        F.struct(*payload, "__op"), F.struct("__seq", "__part")
-                    ).alias("__w")
-                )
-            )
-            return w.filter(F.col("__w.__op") != "delete").select(
-                key,
-                *[F.col(f"__w.{c}").alias(c) for c in payload],
-                "__bucket",
-            )
-        w = allr.groupBy(key).agg(
-            F.max_by(
-                F.struct(*payload, "__bucket", "__op"), F.struct("__seq", "__part")
-            ).alias("__w")
-        )
-        return w.filter(F.col("__w.__op") != "delete").select(
-            key,
-            *[F.col(f"__w.{c}").alias(c) for c in payload],
-            F.col("__w.__bucket").alias("__bucket"),
-        )
-
-    def live_keys(self, buckets: set[int] | None = None) -> DataFrame:
-        """Live key set (one column). For MOR tables this reconciles on the
-        NARROW columns only — token arrays are never decoded, so the merge's
-        insert-vs-update classification stays cheap even with delta layers
-        present."""
-        key = self.key_column
-        files = self.live_files()
-        if buckets is not None:
-            files = [e for e in files if e.bucket in buckets]
-        cur_fields = self.fields()
-        key_type = next(f.type for f in cur_fields if f.name == key)
-        if not files:
-            return self.spark.createDataFrame([], schema=f"`{key}` {key_type}")
-        base_files = [e for e in files if e.kind == "base"]
-        delta_files = [e for e in files if e.kind == "delta"]
-        if not delta_files:
-            return self._union_scan(base_files, cur_fields).select(key)
-        parts = [
-            self._union_scan(delta_files, cur_fields, extra=("__op", "__seq", "__part"))
-            .select(key, "__op", "__seq", "__part")
-        ]
-        if base_files:
-            parts.append(
-                self._union_scan(base_files, cur_fields).select(
-                    F.col(key),
-                    F.lit("upsert").alias("__op"),
-                    F.lit(-1).cast("long").alias("__seq"),
-                    F.lit(-1).cast("int").alias("__part"),
-                )
-            )
-        allr = parts[0]
-        for p in parts[1:]:
-            allr = allr.unionByName(p)
-        w = allr.groupBy(key).agg(
-            F.max_by("__op", F.struct("__seq", "__part")).alias("__op")
-        )
-        return w.filter(F.col("__op") != "delete").select(key)
 
     def _map_to_current(
         self,
@@ -643,18 +606,17 @@ class LakeTable:
         self._evolve(fields, op=f"widen:{name}->{new_type}")
 
     def _evolve(self, new_fields: list[Field], last_field_id: int | None = None, op: str = "") -> None:
-        new_meta = dict(self._meta)
+        # a metadata-only transaction: the new schema and its snapshot-log
+        # entry publish as ONE metadata version, so a crash cannot advance
+        # the schema without the log recording it
         nv = self.schema_version + 1
-        schemas = dict(self._meta["schemas"])
-        schemas[str(nv)] = [f.to_json() for f in new_fields]
-        new_meta["schemas"] = schemas
-        new_meta["schema_version"] = nv
+        update = {
+            "schemas": {**self._meta["schemas"], str(nv): [f.to_json() for f in new_fields]},
+            "schema_version": nv,
+        }
         if last_field_id is not None:
-            new_meta["last_field_id"] = last_field_id
-        new_meta["version"] = self._meta["version"] + 1
-        self._publish(new_meta)
-        # schema changes are metadata-only transactions; record in snapshot log
-        self.commit(operation=f"evolve-schema[{op}]", summary={"schema_version": nv})
+            update["last_field_id"] = last_field_id
+        self.commit(f"evolve-schema[{op}]", summary={"schema_version": nv}, meta_update=update)
 
     # ------------------------------------------------------------ maintenance
     def compact(self, min_files: int = 2) -> int:
@@ -669,16 +631,10 @@ class LakeTable:
         frag = {b: es for b, es in by_bucket.items() if len(es) >= min_files}
         if not frag:
             return 0
-        # MOR fold: the bucket-aligned reconcile leaves each bucket whole
-        # inside one task, so the rewrite skips its co-locating exchange —
-        # one wide-payload shuffle for the whole compaction instead of two
-        # (reconcile-by-key + repartition-by-bucket). Still one file per
-        # bucket: a bucket's rows never span tasks. Pure-base compaction
-        # (COW fragmentation) keeps the single write exchange — its scan
-        # partitions don't align with buckets.
-        has_delta = any(e.kind == "delta" for es in frag.values() for e in es)
-        df = self.read(buckets=set(frag), bucket_aligned=has_delta)
-        new_files = self.write_files(df, key_partitioned=has_delta)
+        # MOR: the read keeps the base side map-only, so the rewrite's
+        # repartition("__bucket") is the one wide exchange (one file per
+        # bucket)
+        new_files = self.write_files(self.read(buckets=set(frag)))
         self.commit(
             "replace",
             add_files=new_files,
@@ -693,8 +649,8 @@ class LakeTable:
         analog is rewriting delete/delta files, vs ``compact()``'s
         rewrite_data_files).
 
-        Why it exists: the MOR reconciling read merges base + K delta
-        layers, so within a major-compaction window read cost grows with K
+        Why it exists: the MOR read resolves K delta layers per key, so
+        within a major-compaction window read cost grows with K
         (measured — BENCH.md "Sustained multi-batch replay": 4.5s→17.2s
         across one 8-batch window). ``compact()`` bounds K but rewrites
         every touched base bucket — O(table) at 10^10 rows. Folding is
@@ -703,10 +659,10 @@ class LakeTable:
         the base still holds the masked row, so dropping the tombstone
         would resurrect it (the same rule as Iceberg deletes surviving
         until their data file is rewritten). The winner keeps its original
-        (__seq, __part), so ordering against the base (seq -1) and any
-        future delta layer stays exact. One exchange total: the reconcile
-        clusters on ``__bucket`` and the fanout writer reuses that
-        partitioning (same trick as ``_reconcile(bucket_aligned=True)``).
+        (__seq, __part), so ordering against any future delta layer stays
+        exact. One exchange total: the fold clusters on ``__bucket`` and
+        groups by ``(__bucket, key)``, which that clustering satisfies,
+        and the fanout writer reuses the same partitioning.
 
         Returns the number of delta layers folded (0 = nothing to do).
         """
@@ -714,12 +670,9 @@ class LakeTable:
         layers = {e.batch_dir for e in delta_files}
         if len(layers) < min_layers:
             return 0
-        cur_fields = self.fields()
         key = self.key_column
-        payload = [f.name for f in cur_fields if f.name != key]
-        allr = self._union_scan(
-            delta_files, cur_fields, extra=("__op", "__seq", "__part")
-        )
+        payload = [c for c in self.column_names() if c != key]
+        allr = self._union_scan(delta_files, extra=_SYS)
         w = (
             allr.repartition("__bucket")
             .groupBy("__bucket", key)

@@ -1546,8 +1546,9 @@ def q_mor_replay_state(spark, sf):
     derived feed replayed in TWO micro-batches into a ``merge_mode="mor"``
     LakeTable — upserts/delete-markers land as O(delta) delta files (the
     10^10-scale design point; contrast the reference's full-rewrite merge,
-    ``NaraMergeUtil.scala:54-320``) and the read path reconciles layers
-    with one per-key max_by aggregate (``lakehouse/table.py`` _reconcile).
+    ``NaraMergeUtil.scala:54-320``) and the read path applies the layers
+    as a left-anti join of the base against the delta key set plus the
+    latest live delta row per key (``lakehouse/table.py`` _scan).
     The state aggregate is taken TWICE — ``stage='mor'`` straight off the
     layered read, then after ``compact()`` (Iceberg rewrite_data_files
     analog) ``stage='compacted'`` off the folded base files — and both are

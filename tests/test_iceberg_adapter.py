@@ -168,3 +168,74 @@ def test_write_paths_are_documented_unexecutable():
 def test_rejects_unknown_merge_mode():
     with pytest.raises(ValueError):
         _ad(merge_mode="overwrite")
+
+
+class _Rows:
+    """What ``_need`` returns on a live catalog, reduced to ``collect``."""
+
+    def __init__(self, rows):
+        self.rows = rows
+
+    def collect(self):
+        return self.rows
+
+
+class _Spark:
+    def __init__(self):
+        self.sql_run = []
+
+    def sql(self, text):
+        self.sql_run.append(text)
+
+
+def _log(ad) -> list[dict]:
+    return [
+        {"snapshot_id": 1, "parent_id": None, "operation": "overwrite",
+         "summary": ad.commit_properties(checkpoint={0: 5}, batch_id=6)},
+        {"snapshot_id": 2, "parent_id": 1, "operation": "overwrite",
+         "summary": ad.commit_properties(checkpoint={0: 9}, batch_id=7, last_batch_id=6)},
+        # rewrite_data_files: a snapshot the engine did not write
+        {"snapshot_id": 3, "parent_id": 2, "operation": "replace", "summary": {}},
+    ]
+
+
+def test_snapshots_parse_batch_ids_and_next_id_advances():
+    """Batch ids come back as ints, ``last_batch_id`` is carried past a
+    maintenance snapshot, so the engine's next id follows the last one
+    instead of restarting at 0."""
+    from ingestion3_spark.cdc.replay import ReplayEngine
+
+    ad = _ad()
+    ad._need = lambda sql, what: _Rows(_log(ad))
+    snaps = ad.snapshots()
+    assert [s.batch_id for s in snaps] == [6, 7, None]
+    assert [s.last_batch_id for s in snaps] == [6, 7, 7]
+    assert snaps[1].checkpoint == {0: 9}
+    assert ReplayEngine(spark=None, table=ad)._next_batch_id() == 8
+
+
+def test_commit_carries_last_batch_id_forward():
+    assert _ad().commit_properties(batch_id=8, last_batch_id=7)["cdc.last-batch-id"] == "8"
+    props = _ad().commit_properties(checkpoint={0: 1}, last_batch_id=7)
+    assert props["cdc.last-batch-id"] == "7" and "cdc.batch-id" not in props
+    # a live commit reads the log first and attaches the carried id
+    ad = IcebergAdapter(spark=_Spark(), dry_run=False)
+    ad._need = lambda sql, what: _Rows(_log(ad))
+    ad.commit("merge", source_view="changes", checkpoint={0: 12})
+    head = ad.statements[-1].split("\n", 1)[0]
+    props = json.loads(head[head.index("(") + 1:head.rindex(")")])
+    assert props["cdc.last-batch-id"] == "7"
+    assert ad.spark.sql_run == [ad.merge_into_sql("changes")]
+
+
+def test_live_files_builds_manifest_entries():
+    ad = _ad()
+    ad._need = lambda sql, what: _Rows([
+        {"file_path": "s3://lake/t/data/doc_id_bucket=3/a.parquet", "bucket": 3,
+         "record_count": 10, "content": 0},
+        {"file_path": "s3://lake/t/data/doc_id_bucket=3/d.parquet", "bucket": 3,
+         "record_count": 2, "content": 2},
+    ])
+    files = ad.live_files()
+    assert [(e.bucket, e.rows, e.kind) for e in files] == [(3, 10, "base"), (3, 2, "delta")]
+    assert files[0].batch_dir == "s3://lake/t/data/doc_id_bucket=3"

@@ -8,6 +8,8 @@ back to base, and reads after compaction equal reads before.
 
 from __future__ import annotations
 
+import re
+
 import pyarrow as pa
 import pytest
 
@@ -243,24 +245,99 @@ def test_mor_resume_across_compaction(spark, tmp_table_path, tmp_path, fixtures)
     assert not diff_states(replay_oracle(base, events), _state(table2))
 
 
-def test_mor_bucket_aligned_reconcile_single_exchange(spark, tmp_table_path, tmp_path, fixtures):
-    """Compaction's scale contract: the bucket-aligned reconcile must plan
-    exactly ONE exchange (on __bucket), with the (__bucket, key) groupBy
-    satisfied by that clustering — a second exchange would re-shuffle the
-    full wide payload. Also: the paired fanout rewrite still yields one
-    file per bucket (a bucket never spans tasks)."""
+def _shuffle_exchanges(plan: str) -> list[str]:
+    return re.findall(r"(?<!Broadcast)Exchange \w+", plan)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_mor_read_broadcast_anti_join_and_compact_one_exchange(
+    spark, tmp_table_path, tmp_path, fixtures
+):
+    """The read contract over one delta layer: the base side is map-only
+    (no shuffle exchange anywhere in the plan), the delta key set is the
+    build side of a broadcast left-anti join. compact() reads through that
+    plan, so its rewrite's repartition("__bucket") is the ONE shuffle it
+    runs, and it leaves one file per bucket."""
     base, events = fixtures
     table = _mor_table(spark, tmp_table_path, base)
     eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
-    eng.replay(_spark_df(spark, events), num_batches=2)
+    eng.replay(_spark_df(spark, events), num_batches=1)
+    assert len({e.batch_dir for e in table.live_files() if e.kind == "delta"}) == 1
 
-    plan = table.read(bucket_aligned=True)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
+    plan = _plan(table.read())
+    assert _shuffle_exchanges(plan) == [], plan
+    assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
+    assert "BroadcastExchange" in plan
+    assert "SortAggregate" not in plan and "max_by" not in plan
     expected = _state(table)
 
-    assert table.compact(min_files=2) > 0
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    sc.setJobGroup("compact-probe", "compact")
+    try:
+        assert table.compact(min_files=2) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    stages = {
+        sid for jid in sc.statusTracker().getJobIdsForGroup("compact-probe")
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds
+    }
+    empty = sc._jvm.java.util.ArrayList()
+    quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    shuffle_stages = set()
+    for sid in stages:
+        attempts = store.stageData(sid, False, empty, False, quantiles)
+        for k in range(attempts.size()):
+            if attempts.apply(k).shuffleWriteBytes() > 0:
+                shuffle_stages.add(sid)
+    assert len(shuffle_stages) == 1, shuffle_stages
     by_bucket = {}
     for e in table.live_files():
         by_bucket.setdefault(e.bucket, []).append(e)
+    assert all(e.kind == "base" for e in table.live_files())
     assert all(len(es) == 1 for es in by_bucket.values())
     assert not diff_states(expected, _state(table))
+
+
+@pytest.mark.parametrize("layers", [1, 3])
+def test_mor_read_matches_oracle_broadcast_and_shuffle(
+    spark, tmp_table_path, tmp_path, fixtures, monkeypatch, layers
+):
+    """Reads over one delta layer and over three unfolded layers (deletes
+    and re-inserts of base and new keys across layers) equal the dict
+    replay, both with the broadcast limit and with it at 0, where the
+    anti-join and the multi-layer join-back shuffle instead. live_keys
+    takes the same plan and equals the state's keys. Building either
+    DataFrame starts no Spark job: every scan gets the stored schema."""
+    from ingestion3_spark.lakehouse import table as lt
+
+    base, events = fixtures
+    table = _mor_table(spark, tmp_table_path, base)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
+    eng.replay(_spark_df(spark, events), num_batches=layers)
+    assert len({e.batch_dir for e in table.live_files() if e.kind == "delta"}) == layers
+    expected = replay_oracle(base, events)
+
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    df, keys = table.read(), table.live_keys()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup()) == before
+
+    assert not diff_states(expected, table_state([r.asDict() for r in df.collect()]))
+    assert sorted(r[0] for r in keys.collect()) == sorted(expected)
+
+    monkeypatch.setattr(lt, "BROADCAST_WINNERS_MAX", 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = table.read()
+        assert "BroadcastExchange" not in _plan(df)
+        assert not diff_states(expected, table_state([r.asDict() for r in df.collect()]))
+        assert sorted(r[0] for r in table.live_keys().collect()) == sorted(expected)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)

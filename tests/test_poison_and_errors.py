@@ -194,3 +194,42 @@ def test_replay_with_debug_key_verification(
     expected = replay_oracle(base, events)
     actual = table_state([r.asDict() for r in table.read().collect()])
     assert not diff_states(expected, actual)
+
+
+def test_error_count_back_reads_only_its_batch(spark, tmp_table_path, tmp_path, monkeypatch):
+    """Each batch's error count-back reads its own ``batch_id=<id>``
+    partition of the sink, never the sink root: listing every partition
+    ever written would cost O(batches) per batch."""
+    import os
+
+    from pyspark.sql import DataFrameReader
+
+    read_paths = []
+    orig = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kw):
+        read_paths.extend(paths)
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    base = make_corpus(20, seed=19, max_len=16)
+    table = _seed_table(spark, tmp_table_path, base)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
+    root = eng._err_path()
+    for bid in (0, 1):
+        feed = pa.table(
+            {
+                "seq": pa.array([2 * bid + 1, 2 * bid + 2], pa.int64()),
+                "part": pa.array([0, 0], pa.int32()),
+                # the insert with no tokens errors
+                "op": pa.array(["update", "insert"]),
+                "doc_id": pa.array(["doc-00000001", f"doc-new-{bid}"]),
+                "tokens": pa.array([[bid], None], pa.list_(pa.int32())),
+                "n_tok": pa.array([1, None], pa.int32()),
+                "source": pa.array(["s1", "s1"]),
+            }
+        )
+        assert eng.apply_batch(_spark_df(spark, feed), batch_id=bid).errors == 1
+    assert [p for p in read_paths if p.startswith(root)] == [
+        os.path.join(root, "batch_id=0"), os.path.join(root, "batch_id=1")]
+    assert eng.errors_df().count() == 2

@@ -153,3 +153,31 @@ def test_add_column_mid_replay_mor_with_deltas(spark, tmp_table_path, tmp_path):
     assert after.count() == total
     assert after.filter("lang = 'de'").count() == n_de
     assert after.filter("lang is null").count() == n_null
+
+
+def test_evolve_publishes_schema_and_log_entry_once(spark, seeded, monkeypatch):
+    """A schema change is ONE metadata version carrying both the new
+    schema and its ``evolve-schema`` snapshot: a crash at any later
+    publish cannot leave the schema advanced with no log entry."""
+    table, _ = seeded
+    version = table._meta["version"]
+    publishes = []
+    orig = LakeTable._publish
+
+    def crash_after_first(self, new_meta):
+        publishes.append(new_meta["version"])
+        if len(publishes) > 1:
+            raise RuntimeError("crash before the second metadata publish")
+        orig(self, new_meta)
+
+    monkeypatch.setattr(LakeTable, "_publish", crash_after_first)
+    try:
+        table.add_column("lang", "string")
+    except RuntimeError:
+        pass
+    monkeypatch.undo()
+    assert publishes == [version + 1]
+    reloaded = LakeTable.load(spark, table.path)
+    assert reloaded.schema_version == 2
+    assert reloaded.snapshots()[-1].operation == "evolve-schema[add:lang]"
+    assert reloaded.current_snapshot.summary == {"schema_version": 2}
