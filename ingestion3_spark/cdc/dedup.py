@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ingestion3_spark.session import local_frame
+
 # packed winner-key bit layout: [ seq:42 | part:16 | op:4 ] — max() over this
 # long IS lexicographic max over (seq, part), with op riding in the low bits
 # (ties only between exact duplicate deliveries, where op is identical too).
@@ -96,15 +98,25 @@ def drop_applied(df: DataFrame, checkpoint: dict[int, int]) -> DataFrame:
     per-part offset (resume semantics; OAI resumption-token analog,
     ``harvesters/oai/OaiMultiPageResponseBuilder.scala:32-120``).
 
-    Broadcast join against the tiny checkpoint map — never a driver-side
-    ``collect`` of event ids (the reference's scalability ceiling,
-    ``NaraMergeUtil.scala:140-146``).
+    Broadcast hash join against the tiny checkpoint table — never a
+    driver-side ``collect`` of event ids (the reference's scalability
+    ceiling, ``NaraMergeUtil.scala:140-146``), and never a literal
+    ``create_map`` lookup, whose per-row probe is linear in the number of
+    parts where the hash join's is O(1).
+
+    The build side is a driver-local ``LocalTableScan`` (``local_frame``),
+    not a Python RDD: every query that reads ``pending`` builds its own
+    broadcast, and a batch runs four (offsets, winners, error routing and
+    the late-materialization write). Over a ``Scan ExistingRDD`` each
+    build was a Spark job that started Python workers on every core and
+    took seconds of executor time to read a handful of rows.
     """
     if not checkpoint:
         return df
-    spark = df.sparkSession
-    ckpt = spark.createDataFrame(
-        [(int(p), int(s)) for p, s in checkpoint.items()], "part int, _applied_seq long"
+    ckpt = local_frame(
+        df.sparkSession,
+        [(int(p), int(s)) for p, s in checkpoint.items()],
+        "part int, _applied_seq long",
     )
     return (
         df.join(F.broadcast(ckpt), "part", "left")

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ingestion3_spark.lakehouse.adapter import TableAdapter
 from ingestion3_spark.lakehouse.table import LakeTable, Snapshot
+from ingestion3_spark.session import local_frame
 
 LINEAGE_COLS = [
     "batch_id", "part", "inserts", "updates", "deletes",
@@ -273,6 +274,4 @@ def lineage_df(table: LakeTable, spark=None) -> DataFrame:
         rows.extend(s.lineage)
     schema = ("batch_id long, part int, inserts long, updates long, deletes long, "
               "invalid_deletes long, dedup_dropped long, errors long")
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame([[r[c] for c in LINEAGE_COLS] for r in rows], schema)
+    return local_frame(spark, [[r[c] for c in LINEAGE_COLS] for r in rows], schema)

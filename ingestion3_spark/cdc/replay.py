@@ -30,6 +30,7 @@ from ingestion3_spark.cdc import validate as val
 from ingestion3_spark.cdc.merge import MergeResult, merge_batch
 from ingestion3_spark.lakehouse.adapter import TableAdapter
 from ingestion3_spark.lakehouse.table import BROADCAST_WINNERS_MAX, Field, LakeTable
+from ingestion3_spark.session import local_frame
 
 CORPUS_FIELDS = [
     Field(1, "doc_id", "string"),
@@ -473,7 +474,7 @@ class ReplayEngine:
         """
         schema = "batch_id bigint, " + _ERR_SCHEMA
         if not self.error_dir or not os.path.exists(self._err_path()):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return (
             self.spark.read.schema(schema).parquet(self._err_path())
             .select("batch_id", *(c for c, _ in _ERR_COLS))

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ingestion3_spark.cdc import dedup as dd
+from ingestion3_spark.session import local_frame
 
 FORMAT_VERSION = 1
 
@@ -220,6 +221,12 @@ class LakeTable:
         self._current_file = current
 
     # ------------------------------------------------------------ properties
+    @property
+    def metadata_location(self) -> str:
+        """Path of the metadata JSON this handle last loaded or published
+        (Iceberg's ``metadata_location``)."""
+        return os.path.join(self.meta_dir, self._current_file)
+
     @property
     def key_column(self) -> str:
         return self._meta["key_column"]
@@ -491,9 +498,7 @@ class LakeTable:
             files = [e for e in files if e.bucket in buckets]
         if not files:
             types = {f.name: f.type for f in self.fields()} | {"__bucket": "int"}
-            return self.spark.createDataFrame(
-                [], schema=", ".join(f"`{c}` {types[c]}" for c in cols)
-            )
+            return local_frame(self.spark, [], ", ".join(f"`{c}` {types[c]}" for c in cols))
         key = self.key_column
         base_files = [e for e in files if e.kind == "base"]
         delta_files = [e for e in files if e.kind == "delta"]

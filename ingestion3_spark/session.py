@@ -11,8 +11,12 @@ payloads, so the vectorized reader stays ON.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -91,6 +95,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str) -> DataFrame:
+    """A small driver-built DataFrame that plans as ``LocalTableScan``.
+
+    ``spark.createDataFrame(<python list>)`` plans as ``Scan ExistingRDD``:
+    a Python RDD that every query reading the frame re-runs as a Spark job,
+    starting Python workers on the executors. An Arrow table is handed to
+    the JVM as a file and becomes a ``LocalRelation`` instead, whatever the
+    session's ``spark.sql.execution.arrow.pyspark.enabled`` and also when
+    ``rows`` is empty (a pandas frame falls back to the RDD path in both
+    cases). ``rows`` are tuples in the column order of the DDL ``schema``.
+    """
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def stop_spark() -> None:

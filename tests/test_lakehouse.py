@@ -3,6 +3,9 @@ optimistic concurrency."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from ingestion3_spark.cdc.generator import make_corpus
@@ -69,6 +72,17 @@ def test_checkpoint_carried_forward(spark, table):
     table.commit("merge", checkpoint={0: 100, 1: 50})
     table.commit("merge", checkpoint={1: 75})
     assert table.checkpoint() == {0: 100, 1: 75}
+
+
+def test_metadata_location_follows_publish(spark, table):
+    before = table.metadata_location
+    table.commit("merge", checkpoint={0: 1})
+    after = table.metadata_location
+    with open(os.path.join(table.meta_dir, "_current")) as f:
+        assert os.path.join(table.meta_dir, f.read().strip()) == after != before
+    assert LakeTable.load(spark, table.path).metadata_location == after
+    with open(after) as f:
+        assert json.load(f)["current_snapshot_id"] == table.current_snapshot.snapshot_id
 
 
 def test_empty_read_matches_schema(spark, tmp_path):

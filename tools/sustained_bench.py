@@ -133,8 +133,7 @@ def main() -> int:
             table.expire_snapshots(keep_last=4)
             table.vacuum()
             expire_s.append(round(time.perf_counter() - t0, 3))
-        meta_bytes.append(os.path.getsize(
-            os.path.join(table.meta_dir, table._current_file)))
+        meta_bytes.append(os.path.getsize(table.metadata_location))
         snap = table.current_snapshot
         manifest_bytes.append(os.path.getsize(
             os.path.join(table.path, snap.manifest_path)))
