@@ -84,13 +84,18 @@ def winner_keys_packed(df: DataFrame, key: str = "doc_id") -> DataFrame:
     delete with NULL (seq, part) — so NULL packed keys are dropped here.
     Given unvalidated rows, a doc whose every event has an unknown op then
     simply has no winner, which is correct: validation routes all of its
-    events to the error table. Returns ``(key, seq, part, op)`` — one row
-    per key.
+    events to the error table.
+
+    Returns ``(key, seq, part, op, _pk, _n)`` — one row per key: the
+    winner, its ``packed_order`` value ``_pk`` (the replay matches scan
+    rows against it to recover the winner's payload) and ``_n``, the
+    key's rows that took part (a ``count`` in the same codegen
+    aggregate; summed over the clean rows it is the batch's clean count).
     """
     pk = packed_order().alias("_pk")
     narrow = df.select(key, pk).filter(F.col("_pk").isNotNull())
-    agg = narrow.groupBy(key).agg(F.max("_pk").alias("_pk"))
-    return agg.select(key, *unpack_order(F.col("_pk")))
+    agg = narrow.groupBy(key).agg(F.max("_pk").alias("_pk"), F.count(F.lit(1)).alias("_n"))
+    return agg.select(key, *unpack_order(F.col("_pk")), "_pk", "_n")
 
 
 def drop_applied(df: DataFrame, checkpoint: dict[int, int]) -> DataFrame:

@@ -99,8 +99,11 @@ class ReplayEngine:
           rows, persist the ~|keys| winner set, return per-bucket counts —
           overlapped with error routing (wide scan -> tiny
           batch-partitioned write + pruned count-back) and the
-          column-pruned per-part offsets aggregation. events_in / error
-          totals ride along as ``observe()`` metrics.
+          column-pruned per-part offsets aggregation. The batch totals
+          come from aggregates these jobs run anyway: ``events_in`` is the
+          sum of the offsets job's per-part counts, the clean count the
+          sum of the winner aggregate's per-key counts, and the errors
+          are the difference.
         * phase 2 (two CONCURRENT jobs): the narrow classify agg and the
           data write. The write late-materializes the wide payload:
           source scan ⋈ broadcast(winner keys) — the wide token arrays
@@ -118,11 +121,10 @@ class ReplayEngine:
 
         ``BatchStats.errors`` is the committed lineage's error total: with
         an error sink that counts distinct ``(part, seq)``, as
-        ``errors_df`` does.
+        ``errors_df`` does; without one it counts erroring deliveries.
         """
         from concurrent import futures
 
-        from pyspark.sql import Observation
         from pyspark.storagelevel import StorageLevel
 
         self.check_compat(events)
@@ -133,25 +135,11 @@ class ReplayEngine:
         # evolution: added/renamed columns flow once the metadata
         # transaction has been applied)
         payload = [c for c in self.table.column_names() if c != key]
-
-        # one Observation per consuming JOB: two concurrent actions racing a
-        # shared CollectMetrics node can hand Observation.get a malformed
-        # row (observed as a toPyRow assertion failure on empty redelivery
-        # batches), so the error-routing scan and the winner scan each get
-        # their own instance.
         # Routing runs on the CHEAP error predicate (no per-row message
         # structs on the 10^7-row scans); full messages are built only for
         # the errored subset inside _route_errors — property-tested equal
         # to has_error(validate_events(df)).
-        errp = val.error_predicate()
-        metric_cols = (
-            F.count(F.lit(1)).alias("events_in"),
-            F.sum(errp.cast("long")).alias("n_err"),
-        )
-        obs_err = Observation()
-        observed = pending.observe(obs_err, *metric_cols)
-        obs_win = Observation()
-        clean = pending.observe(obs_win, *metric_cols).filter(~errp)
+        clean = pending.filter(~val.error_predicate())
         winners = None
         try:
             with futures.ThreadPoolExecutor(max_workers=2) as pool:
@@ -160,109 +148,72 @@ class ReplayEngine:
                 # for checkpoint bookkeeping
                 f_offsets = pool.submit(
                     lambda: pending.groupBy("part")
-                    .agg(F.max("seq").alias("hi"))
+                    .agg(F.max("seq").alias("hi"), F.count(F.lit(1)).alias("n"))
                     .collect()
                 )
                 # winners over the clean rows (the wide scan re-evaluates
                 # the error predicate); the error-routing job (if any) runs
                 # in a parallel thread and its per-part counts join the
                 # atomic commit via the future
-                err_by_part, f_err = {}, None
+                f_err = None
                 if self.error_dir is not None:
-                    f_err = pool.submit(self._route_errors, observed, batch_id, obs_err)
+                    f_err = pool.submit(self._route_errors, pending, batch_id)
                 winners = (
                     dd.winner_keys_packed(clean.select(key, "seq", "part", "op"), key=key)
                     .withColumn("__bucket", self.table.bucket_expr())
                     .persist(StorageLevel.MEMORY_AND_DISK)
                 )
-                bucket_rows = winners.groupBy("__bucket").count().collect()
+                bucket_rows = (
+                    winners.groupBy("__bucket")
+                    .agg(F.count(F.lit(1)).alias("n"), F.sum("_n").alias("n_clean"))
+                    .collect()
+                )
                 offset_rows = f_offsets.result()
                 if not offset_rows:
-                    # fully-redelivered/empty batch: return BEFORE touching
-                    # Observation.get — AQE's empty-relation propagation
-                    # removes the CollectMetrics node from collect-style
-                    # actions on an empty stage, leaving the observation
-                    # holding a schemaless row that crashes toPyRow
+                    # fully-redelivered/empty batch: nothing to commit
                     stats = BatchStats(batch_id, 0, 0, 0, None)
                     self.history.append(stats)
                     return stats
                 touched = {int(r["__bucket"]) for r in bucket_rows}
-                n_winners = sum(int(r["count"]) for r in bucket_rows)
-                # metrics from the observation whose single consuming job
-                # has definitely completed
-                if n_winners > 0:
-                    metrics = obs_win.get
-                    events_in = int(metrics["events_in"] or 0)
-                    n_err = int(metrics["n_err"] or 0)
-                    if n_err and f_err is None:
-                        err_by_part[(batch_id, -1)] = {"errors": n_err}
-                else:
-                    # poison batch: pending is non-empty but every event
-                    # failed validation, so obs_win's single consuming job
-                    # (the winner agg) ran on an empty-after-filter plan —
-                    # the same AQE empty-relation/CollectMetrics condition
-                    # as the empty-batch return above. Derive the totals
-                    # from the error-routing write (writes never collapse)
-                    # or a plain count instead of touching obs_win.
-                    if f_err is not None:
-                        err_by_part = f_err.result() or {}
-                        f_err = None
-                        metrics = obs_err.get
-                        events_in = int(metrics["events_in"] or 0)
-                        n_err = int(metrics["n_err"] or 0)
-                    else:
-                        events_in = pending.count()
-                        n_err = events_in
-                        if n_err:
-                            err_by_part[(batch_id, -1)] = {"errors": n_err}
+                n_winners = sum(int(r["n"]) for r in bucket_rows)
+                events_in = sum(int(r["n"]) for r in offset_rows)
+                n_clean = sum(int(r["n_clean"]) for r in bucket_rows)
+                n_err = events_in - n_clean
+                # without a sink the errors are counted here, not routed
+                err_by_part = {}
+                if n_err and f_err is None:
+                    err_by_part[(batch_id, -1)] = {"errors": n_err}
                 new_ckpt = dict(ckpt)
                 for r in offset_rows:
                     p = int(r["part"])
                     new_ckpt[p] = max(int(r["hi"]), new_ckpt.get(p, -1))
 
                 # late materialization: recover the winners' wide payload by
-                # broadcast-joining the winner (seq, part) keys back to the
-                # scan — packed into one BIGINT (see pk2 below), the match
-                # is EXACT under the feed's (part, seq)-uniqueness contract.
-                # Surviving rows per key are byte-identical duplicate
-                # re-deliveries of that key's winner (at-least-once feed),
-                # so a plain dropDuplicates — a |winners|-row First
-                # aggregation — finishes the dedup deterministically
-                # (measured 2.3x cheaper than a wide max_by, which runs in
-                # ObjectHashAggregate). Beyond BROADCAST_WINNERS_MAX:
-                # shuffle join on the narrow keys (at 10^10-event scale,
-                # pair with a bucketed base layout).
+                # broadcast-joining the winners' packed (seq, part, op) —
+                # ``dd.packed_order``, guard included — back to the scan.
+                # The feed's (part, seq)-uniqueness contract (exact byte-
+                # identical redeliveries only) makes this single-long
+                # equi-join exact: rows matching a winner's packed value
+                # are that winner's delivery or its redeliveries, nothing
+                # else. One 8-byte column per broadcast map entry (the
+                # driver-side build of a multi-million-entry map is SERIAL
+                # time), and the probe side is a LongHashedRelation — no
+                # per-row xxhash64, no post-filter. Surviving rows per key
+                # are byte-identical duplicates, so a plain dropDuplicates
+                # — a |winners|-row First aggregation — finishes the dedup
+                # deterministically (measured 2.3x cheaper than a wide
+                # max_by, which runs in ObjectHashAggregate). Beyond
+                # BROADCAST_WINNERS_MAX: shuffle join on the narrow keys
+                # (at 10^10-event scale, pair with a bucketed base layout).
                 bcast = n_winners <= BROADCAST_WINNERS_MAX
-                # (seq, part) packed into one long IS the join key: the
-                # feed's (part, seq)-uniqueness contract (exact byte-
-                # identical redeliveries only) makes a single-long equi-join
-                # exact — rows matching a winner's packed (seq, part) are
-                # that winner's delivery or its redeliveries, nothing else.
-                # One 8-byte column per broadcast map entry (the driver-side
-                # build of a multi-million-entry map is SERIAL time, so
-                # every byte in it costs scaling), and the probe side is a
-                # LongHashedRelation — no per-row xxhash64, no post-filter.
-                # same per-row domain guard as packed_order: the packing is
-                # only injective while part < 2^16 and seq < 2^42
-                pk2 = (
-                    F.shiftleft(F.col("seq"), 16)
-                    + F.col("part").cast("long")
-                    + F.coalesce(
-                        F.assert_true(
-                            (F.col("part") >= 0) & (F.col("part") < F.lit(dd.PACK_PART_MAX))
-                            & (F.col("seq") >= 0) & (F.col("seq") < F.lit(dd.PACK_SEQ_MAX)),
-                            F.lit("seq/part outside pk2 packed domain "
-                                  "(seq < 2^42, part < 2^16)"),
-                        ).cast("long"),
-                        F.lit(0),
-                    )
-                )
                 # payload normalization (n_tok recompute, delete-nulling)
                 # WITHOUT message construction: every row surviving the
                 # exact winner join is clean by construction (winners are
                 # selected from clean rows and (part, seq) is unique), so
                 # the messages array would be dead weight on this scan
-                clean_norm = val.normalize_payload(clean, tuple(payload))
+                rows = val.normalize_payload(clean, tuple(payload)).select(
+                    key, "op", *payload, "seq", "part"
+                )
                 if bcast:
                     # the packed-long match is exact ONLY under the feed's
                     # (part, seq)-uniqueness contract; a violating feed
@@ -271,20 +222,14 @@ class ReplayEngine:
                     # extra broadcast string column + an assert_true) —
                     # off on the hot path, on in tests/test_poison_and_errors.py.
                     debug = os.environ.get("I3S_DEBUG", "0") == "1"
-                    wcols = [pk2.alias("_wpk")] + (
-                        [F.col(key).alias("_wkey")] if debug else []
-                    )
-                    wk = F.broadcast(winners.select(*wcols))
-                    delta = (
-                        clean_norm.select(key, "op", *payload, "seq", "part")
-                        .withColumn("_wpk", pk2)
-                        .join(wk, "_wpk", "inner")
-                        .drop("_wpk")
-                    )
+                    wk = F.broadcast(winners.select(
+                        "_pk", *([F.col(key).alias("_wkey")] if debug else [])
+                    ))
+                    delta = rows.withColumn("_pk", dd.packed_order()).join(wk, "_pk").drop("_pk")
                     if debug:
-                        # folded into a KEPT column (same trick as pk2's
-                        # domain guard) — a dropped assert column would be
-                        # pruned unevaluated by Catalyst
+                        # folded into a KEPT column (same trick as
+                        # packed_order's domain guard) — a dropped assert
+                        # column would be pruned unevaluated by Catalyst
                         delta = delta.withColumn(
                             "seq",
                             F.col("seq") + F.coalesce(
@@ -299,11 +244,7 @@ class ReplayEngine:
                             ),
                         ).drop("_wkey")
                 else:
-                    delta = clean_norm.select(key, "op", *payload, "seq", "part").join(
-                        winners.select(key, "seq", "part"),
-                        [key, "seq", "part"],
-                        "inner",
-                    )
+                    delta = rows.join(winners.select(key, "seq", "part"), [key, "seq", "part"])
                 # one exchange: repartition by the WRITE's own bucket column
                 # first, then dedup on (bucket, key) — hashpartitioning
                 # ([__bucket]) is a subset of the dedup's clustering keys,
@@ -329,7 +270,7 @@ class ReplayEngine:
                     broadcast_winners=bcast,
                     extra_lineage=err_by_part,
                     extra_lineage_future=f_err,
-                    clean_count=events_in - n_err,
+                    clean_count=n_clean,
                     n_winners=n_winners,
                 )
             errors = sum(r["errors"] for r in result.lineage)
@@ -340,15 +281,23 @@ class ReplayEngine:
             if winners is not None:
                 winners.unpersist()
 
-    def _route_errors(self, observed: DataFrame, batch_id: int, obs) -> dict:
+    def _route_errors(self, pending: DataFrame, batch_id: int) -> dict:
         """Error-table write (MessageCollector report analog) + per-part
         counts for lineage, keyed ``(batch_id, part)``. At-least-once —
         counts and ``errors_df`` dedup by (part, seq). The write is
         partitioned by ``batch_id`` so the count-back read prunes to THIS
-        batch's files (O(batch errors), not O(all errors ever written))."""
+        batch's files (O(batch errors), not O(all errors ever written)).
+        An observation on the write's own input tells whether this attempt
+        routed any error; only then is the partition read back."""
+        from pyspark.sql import Observation
+
+        errp = val.error_predicate()
+        obs = Observation()
         err_path = self._err_path()
         (
-            val.validate_events(observed.filter(val.error_predicate()))
+            val.validate_events(
+                pending.observe(obs, F.sum(errp.cast("long")).alias("n_err")).filter(errp)
+            )
             .select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
                 *(F.col(c).cast(t).alias(c) for c, t in _ERR_COLS),

@@ -156,32 +156,34 @@ class IcebergAdapter:
         return self
 
     # -- transaction log --------------------------------------------------------
-    def checkpoint_sql(self) -> str:
-        """Per-partition applied offsets from the CURRENT snapshot's
-        summary — the engine wrote them there at commit time, so MERGE +
-        checkpoint are one atomic unit (what the reference's side files,
-        ``OutputHelper.scala:62-73``, cannot give)."""
-        return (
-            f"SELECT summary['cdc.offsets'] AS offsets\n"
-            f"FROM {self.identifier}.snapshots\n"
-            f"ORDER BY committed_at DESC LIMIT 1"
-        )
-
     def checkpoint(self) -> dict[int, int]:
-        rows = self._need(self.checkpoint_sql(), "checkpoint read").collect()
-        if not rows or rows[0]["offsets"] is None:
-            return {}
-        return {int(k): int(v) for k, v in json.loads(rows[0]["offsets"]).items()}
+        """Per-partition applied offsets from the newest snapshot in the
+        current lineage that carries ``cdc.offsets`` — the engine wrote
+        them there at commit time, so MERGE + checkpoint are one atomic
+        unit (what the reference's side files, ``OutputHelper.scala:62-73``,
+        cannot give). Maintenance snapshots (``rewrite_data_files``,
+        ``rewrite_position_delete_files``) carry no offsets and are
+        skipped, so resume never falls back to seq 0 after them."""
+        for snap in reversed(self.snapshots()):
+            if "cdc.offsets" in snap.summary:
+                return snap.checkpoint
+        return {}
 
     def snapshots_sql(self) -> str:
+        """The current table lineage in commit order: ``.history`` marks
+        the snapshots that are ancestors of the current one (rolled-back
+        branches are not) and orders them by when each became current."""
         return (
-            f"SELECT snapshot_id, parent_id, operation, summary\n"
-            f"FROM {self.identifier}.snapshots ORDER BY committed_at"
+            f"SELECT s.snapshot_id, s.parent_id, s.operation, s.summary\n"
+            f"FROM {self.identifier}.history h\n"
+            f"JOIN {self.identifier}.snapshots s ON h.snapshot_id = s.snapshot_id\n"
+            f"WHERE h.is_current_ancestor\n"
+            f"ORDER BY h.made_current_at"
         )
 
     def snapshots(self) -> list["Snapshot"]:
-        """The snapshot log with the engine's summary properties parsed.
-        ``last_batch_id`` is the commit's carried-forward
+        """The current lineage's snapshots with the engine's summary
+        properties parsed. ``last_batch_id`` is the commit's carried-forward
         ``cdc.last-batch-id``, or the highest id seen so far in the log for
         snapshots the engine did not write (maintenance procedures)."""
         from ingestion3_spark.lakehouse.table import Snapshot

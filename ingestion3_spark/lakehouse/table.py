@@ -303,7 +303,7 @@ class LakeTable:
         one bucket dir (one file per bucket). ``key_partitioned=True`` is
         the fanout-writer path (Iceberg's fanout write analog): the caller
         guarantees the df is already exchange-partitioned on the key or on
-        ``__bucket`` itself (per-key dedup output, delta fold), so the
+        ``__bucket`` itself (the replay's per-key dedup output), so the
         co-locating repartition is SKIPPED and each task writes the bucket
         dirs its keys hash into — one less full materialization of the wide
         payload in the merge's critical path, at the cost of up-to
@@ -479,19 +479,12 @@ class LakeTable:
         MOR applies the delta layer the way Iceberg applies equality
         deletes: base rows whose key any delta row names are dropped by a
         left-anti join against the NARROW delta key set, and the latest
-        delta row per key is added back unless it is a delete. Base files
-        hold one row per key (written by the load or by compaction), so
-        the base side is map-only: the table is never shuffled to read it.
-        The delta key set is broadcast when the manifest's delta row count
-        fits ``BROADCAST_WINNERS_MAX``, else the anti-join shuffles.
-
-        One delta layer (one ``write_delta_files`` call) holds one row per
-        key by construction (the merge writes deduplicated changes, the
-        fold groups by key) and is read as is. Two or more layers pick the
-        latest ``(__seq, __part)`` per key with the replay's narrow
-        packed-long ``max`` over the delta files only; a payload read
-        joins it back to the delta rows (late materialization, as in
-        ``apply_batch``), a key-only read needs only the narrow rows.
+        delta row per key (``_latest_deltas``) is added back unless it is
+        a delete. Base files hold one row per key (written by the load or
+        by compaction), so the base side is map-only: the table is never
+        shuffled to read it. The delta key set is broadcast when the
+        manifest's delta row count fits ``BROADCAST_WINNERS_MAX``, else
+        the anti-join shuffles.
         """
         files = self.live_files(snapshot_id)
         if buckets is not None:
@@ -505,31 +498,49 @@ class LakeTable:
         base = self._union_scan(base_files) if base_files else None
         if not delta_files:
             return base.select(*cols)
-        deltas = self._union_scan(delta_files, extra=_SYS)
-        bcast = sum(e.rows for e in delta_files) <= BROADCAST_WINNERS_MAX
-        # the latest narrow (key, __op, __seq, __part) row per key
-        latest = deltas.select(key, *_SYS)
-        if len({e.batch_dir for e in delta_files}) > 1:
-            latest = dd.winner_keys_packed(
-                deltas.select(key, *(F.col(c).alias(c[2:]) for c in _SYS)), key=key
-            ).select(key, *(F.col(c[2:]).alias(c) for c in _SYS))
-            if cols != [key]:
-                narrow = latest.drop("__op")
-                deltas = deltas.join(
-                    F.broadcast(narrow) if bcast else narrow, [key, "__seq", "__part"]
-                )
-        live = (deltas if cols != [key] else latest).filter(F.col("__op") != "delete")
-        live = live.select(*cols)
+        live = (
+            self._latest_deltas(delta_files, key_only=cols == [key])
+            .filter(F.col("__op") != "delete")
+            .select(*cols)
+        )
         if base is None:
             return live
         # the raw scan's keys: a map-only build side (duplicates are harmless
         # to an anti-join), where the winners' keys would need a shuffle
         delta_keys = self._union_scan(delta_files).select(key)
+        bcast = sum(e.rows for e in delta_files) <= BROADCAST_WINNERS_MAX
         return (
             base.join(F.broadcast(delta_keys) if bcast else delta_keys, key, "left_anti")
             .select(*cols)
             .unionByName(live)
         )
+
+    def _latest_deltas(self, delta_files: list[FileEntry], key_only: bool = False) -> DataFrame:
+        """The latest ``(__seq, __part)`` delta row per key with its change
+        envelope ``__op/__seq/__part``, delete tombstones kept: what the
+        read applies over the base and what the fold writes back.
+
+        One delta layer (one ``write_delta_files`` call) holds one row per
+        key by construction (the merge writes deduplicated changes, the
+        fold one row per key) and is read as is. Two or more pick the
+        winner with the replay's narrow packed-long ``max``
+        (``dd.winner_keys_packed``) over the delta files only; unless only
+        the keys are wanted, the winners join back to the delta rows (late
+        materialization, as in ``apply_batch``), broadcast when the delta
+        row count fits ``BROADCAST_WINNERS_MAX``.
+        """
+        key = self.key_column
+        deltas = self._union_scan(delta_files, extra=_SYS)
+        if len({e.batch_dir for e in delta_files}) == 1:
+            return deltas.select(key, *_SYS) if key_only else deltas
+        latest = dd.winner_keys_packed(
+            deltas.select(key, *(F.col(c).alias(c[2:]) for c in _SYS)), key=key
+        ).select(key, *(F.col(c[2:]).alias(c) for c in _SYS))
+        if key_only:
+            return latest
+        narrow = latest.drop("__op")
+        bcast = sum(e.rows for e in delta_files) <= BROADCAST_WINNERS_MAX
+        return deltas.join(F.broadcast(narrow) if bcast else narrow, [key, "__seq", "__part"])
 
     def _union_scan(self, files: list[FileEntry], extra: tuple[str, ...] = ()) -> DataFrame:
         """Scan ``files`` mapped to the current schema, plus ``__bucket``
@@ -650,8 +661,8 @@ class LakeTable:
 
     def compact_deltas(self, min_layers: int = 2) -> int:
         """Minor compaction: fold ALL live delta layers into ONE reconciled
-        delta layer per bucket WITHOUT rewriting any base file (the Iceberg
-        analog is rewriting delete/delta files, vs ``compact()``'s
+        delta layer WITHOUT rewriting any base file (the Iceberg analog is
+        rewriting delete/delta files, vs ``compact()``'s
         rewrite_data_files).
 
         Why it exists: the MOR read resolves K delta layers per key, so
@@ -659,15 +670,16 @@ class LakeTable:
         (measured — BENCH.md "Sustained multi-batch replay": 4.5s→17.2s
         across one 8-batch window). ``compact()`` bounds K but rewrites
         every touched base bucket — O(table) at 10^10 rows. Folding is
-        O(sum of deltas): resolve each key to its max-(__seq, __part)
-        change within the delta stack only, KEEPING delete tombstones —
-        the base still holds the masked row, so dropping the tombstone
-        would resurrect it (the same rule as Iceberg deletes surviving
-        until their data file is rewritten). The winner keeps its original
-        (__seq, __part), so ordering against any future delta layer stays
-        exact. One exchange total: the fold clusters on ``__bucket`` and
-        groups by ``(__bucket, key)``, which that clustering satisfies,
-        and the fanout writer reuses the same partitioning.
+        O(sum of deltas): the read's own resolver (``_latest_deltas``)
+        picks each key's max-(__seq, __part) change within the delta stack
+        only, KEEPING delete tombstones — the base still holds the masked
+        row, so dropping the tombstone would resurrect it (the same rule
+        as Iceberg deletes surviving until their data file is rewritten).
+        The winner keeps its original (__seq, __part), so ordering against
+        any future delta layer stays exact. Only the narrow packed keys
+        enter the winner aggregate's shuffle; the one wide exchange is the
+        write's ``repartition("__bucket")`` of the winning rows, which
+        leaves one file per bucket.
 
         Returns the number of delta layers folded (0 = nothing to do).
         """
@@ -675,27 +687,8 @@ class LakeTable:
         layers = {e.batch_dir for e in delta_files}
         if len(layers) < min_layers:
             return 0
-        key = self.key_column
-        payload = [c for c in self.column_names() if c != key]
-        allr = self._union_scan(delta_files, extra=_SYS)
-        w = (
-            allr.repartition("__bucket")
-            .groupBy("__bucket", key)
-            .agg(
-                F.max_by(
-                    F.struct(*payload, "__op", "__seq", "__part"),
-                    F.struct("__seq", "__part"),
-                ).alias("__w")
-            )
-        )
-        folded = w.select(
-            key,
-            *[F.col(f"__w.{c}").alias(c) for c in payload],
-            F.col("__w.__op").alias("op"),
-            F.col("__w.__seq").alias("seq"),
-            F.col("__w.__part").alias("part"),
-        )
-        new_files = self.write_delta_files(folded, key_partitioned=True)
+        folded = self._latest_deltas(delta_files).withColumnsRenamed({c: c[2:] for c in _SYS})
+        new_files = self.write_delta_files(folded)
         self.commit(
             "replace-deltas",
             add_files=new_files,

@@ -88,14 +88,16 @@ def test_bucket_expr_is_the_partition_transform(spark):
 
 def test_checkpoint_reads_snapshot_summary_and_fails_loudly():
     ad = _ad()
-    sql = ad.checkpoint_sql()
-    assert "FROM lake.cdc.corpus.snapshots" in sql
-    assert "summary['cdc.offsets']" in sql
-    assert "ORDER BY committed_at DESC LIMIT 1" in sql
+    sql = ad.snapshots_sql()
+    # the current lineage only, in the order its snapshots became current
+    assert "FROM lake.cdc.corpus.history h" in sql
+    assert "JOIN lake.cdc.corpus.snapshots s ON h.snapshot_id = s.snapshot_id" in sql
+    assert "WHERE h.is_current_ancestor" in sql
+    assert "ORDER BY h.made_current_at" in sql
     with pytest.raises(IcebergUnavailable) as e:
         ad.checkpoint()
     # the raise carries the statement so a mis-wired deployment is debuggable
-    assert "cdc.offsets" in str(e.value)
+    assert "is_current_ancestor" in str(e.value)
     assert ad.statements == [sql]
 
 
@@ -212,6 +214,17 @@ def test_snapshots_parse_batch_ids_and_next_id_advances():
     assert [s.last_batch_id for s in snaps] == [6, 7, 7]
     assert snaps[1].checkpoint == {0: 9}
     assert ReplayEngine(spark=None, table=ad)._next_batch_id() == 8
+
+
+def test_checkpoint_survives_a_maintenance_snapshot():
+    """The newest snapshot is a ``rewrite_data_files`` commit with no
+    ``cdc.offsets``; the checkpoint comes from the newest one that has
+    them, so resume does not restart at seq 0."""
+    ad = _ad()
+    ad._need = lambda sql, what: _Rows(_log(ad))
+    assert ad.checkpoint() == {0: 9}
+    ad._need = lambda sql, what: _Rows(_log(ad)[2:])
+    assert ad.checkpoint() == {}
 
 
 def test_commit_carries_last_batch_id_forward():

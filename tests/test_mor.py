@@ -95,9 +95,9 @@ def test_mor_compaction_folds_deltas(spark, tmp_table_path, tmp_path, fixtures):
 def test_mor_minor_compact_folds_delta_stack(spark, tmp_table_path, tmp_path, fixtures):
     """compact_deltas() folds K delta layers into ONE without touching any
     base file: read-equality before/after, base paths identical, exactly one
-    delta layer (one file per bucket — the fanout write reuses the fold's
-    bucket clustering), checkpoint carried forward, and further replay plus
-    a later major compact still match the dict-replay oracle."""
+    delta layer (one file per bucket — the write repartitions the winning
+    rows by ``__bucket``), checkpoint carried forward, and further replay
+    plus a later major compact still match the dict-replay oracle."""
     base, events = fixtures
     table = _mor_table(spark, tmp_table_path, base)
     eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
@@ -153,31 +153,78 @@ def test_mor_replay_with_maintenance_cadence(spark, tmp_table_path, tmp_path, fi
     assert all(s.changes == 0 for s in stats)
 
 
-def test_mor_minor_compact_keeps_tombstones(spark, tmp_table_path, tmp_path):
+_EVENT_SCHEMA = ("seq long, part int, op string, doc_id string, tokens array<int>, "
+                 "n_tok int, source string")
+
+
+# (seq, part, op, doc_id, tokens, n_tok, source) rows, one list per delta layer
+_FOLD_INPUTS = (
+    # a delete of a base row next to an update, in two layers
+    [[(1, 0, "delete", "doc-00000003", None, None, None)],
+     [(2, 0, "update", "doc-00000005", [7, 7], 2, "cc")]],
+    # a base key updated, deleted and re-inserted across three layers, and
+    # another base key deleted only in the middle one
+    [[(1, 0, "update", "doc-00000005", [7, 7], 2, "cc")],
+     [(2, 0, "delete", "doc-00000005", None, None, None),
+      (3, 1, "delete", "doc-00000003", None, None, None)],
+     [(4, 0, "insert", "doc-00000005", [9], 1, "wiki")]],
+)
+
+
+def test_mor_minor_compact_keeps_tombstones(spark, tmp_path):
     """A delete of a BASE row must survive the fold as a tombstone: the
     base file still holds the old row, so dropping the delete during minor
-    compaction would resurrect it on the next read."""
+    compaction would resurrect it on the next read. Each key folds to its
+    latest (seq, part) change, the state equals the dict-replay oracle,
+    and the fold runs the narrow codegen winner aggregate, never a wide
+    ``max_by`` (ObjectHashAggregate or its sort fallback)."""
     base = make_corpus(20, seed=11, max_len=16)
-    table = _mor_table(spark, tmp_table_path, base)
+    for i, layers in enumerate(_FOLD_INPUTS):
+        _fold_and_check(spark, str(tmp_path / f"t{i}"), base, layers)
+
+
+def _fold_and_check(spark, path, base, layers):
+    from ingestion3_spark.lakehouse.table import _SYS
+
+    table = _mor_table(spark, path, base)
     eng = ReplayEngine(spark, table)
-    import datetime as dt
-    rows = [
-        (1, 0, "delete", "doc-00000003", None, None, None),
-        (2, 0, "update", "doc-00000005", [7, 7], 2, "cc"),
-    ]
-    df = spark.createDataFrame(
-        [r + (dt.datetime(2026, 1, 1),) for r in rows],
-        "seq long, part int, op string, doc_id string, tokens array<int>, "
-        "n_tok int, source string, ts timestamp",
-    )
-    eng.replay(df, num_batches=2)  # two delta layers
-    assert table.compact_deltas() == 2
+    for bid, rows in enumerate(layers):
+        eng.apply_batch(spark.createDataFrame(rows, _EVENT_SCHEMA), batch_id=bid)
+    plans = []
+    write = table.write_delta_files
+
+    def spy(df, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(df, **kw)
+
+    table.write_delta_files = spy
+    assert table.compact_deltas() == len(layers)
+    assert len(plans) == 1
+    assert not re.search(r"ObjectHashAggregate|SortAggregate|max_by", plans[0])
+
+    events = [r for rows in layers for r in rows]
+    latest = {}
+    for r in sorted(events):
+        latest[r[3]] = r
     folded = [e for e in table.live_files() if e.kind == "delta"]
-    assert folded  # the tombstone is still materialized as a delta row
+    assert len({e.batch_dir for e in folded}) == 1
+    got = {
+        r["doc_id"]: (r["__op"], r["__seq"], r["__part"], r["tokens"])
+        for r in table._union_scan(folded, extra=_SYS).collect()
+    }
+    # tombstones are still materialized as delta rows
+    assert got == {k: (r[2], r[0], r[1], r[4]) for k, r in latest.items()}
+    feed = pa.table({
+        "seq": pa.array([r[0] for r in events], pa.int64()),
+        "part": pa.array([r[1] for r in events], pa.int32()),
+        "op": [r[2] for r in events],
+        "doc_id": [r[3] for r in events],
+        "tokens": pa.array([r[4] for r in events], pa.list_(pa.int32())),
+        "source": [r[6] for r in events],
+    })
     state = _state(table)
-    assert "doc-00000003" not in state
-    assert list(state["doc-00000005"][0]) == [7, 7]
-    assert len(state) == 20 - 1
+    assert not diff_states(replay_oracle(base, feed), state)
+    assert "doc-00000003" not in state and len(state) == 20 - 1
 
 
 def test_mor_insert_delete_insert_one_key(spark, tmp_table_path, tmp_path):

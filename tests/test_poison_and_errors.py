@@ -14,6 +14,7 @@ Covers the round-3 hardening (ADVICE r2):
 from __future__ import annotations
 
 import pyarrow as pa
+import pytest
 
 from ingestion3_spark.cdc.generator import make_corpus, make_events
 from ingestion3_spark.cdc.oracle import diff_states, replay_oracle, table_state
@@ -24,8 +25,9 @@ def _spark_df(spark, tbl: pa.Table):
     return spark.createDataFrame(tbl.to_pandas())
 
 
-def _seed_table(spark, path, base: pa.Table, num_buckets=4):
-    table = ReplayEngine.create_table(spark, path, num_buckets=num_buckets)
+def _seed_table(spark, path, base: pa.Table, num_buckets=4, merge_mode="cow"):
+    table = ReplayEngine.create_table(spark, path, num_buckets=num_buckets,
+                                      merge_mode=merge_mode)
     files = table.write_files(_spark_df(spark, base))
     table.commit("append", add_files=files)
     return table
@@ -233,3 +235,99 @@ def test_error_count_back_reads_only_its_batch(spark, tmp_table_path, tmp_path, 
     assert [p for p in read_paths if p.startswith(root)] == [
         os.path.join(root, "batch_id=0"), os.path.join(root, "batch_id=1")]
     assert eng.errors_df().count() == 2
+
+
+_EVENT_SCHEMA = ("seq long, part int, op string, doc_id string, tokens array<int>, "
+                 "n_tok int, source string")
+
+
+def _rows_df(spark, rows):
+    return spark.createDataFrame(rows, _EVENT_SCHEMA)
+
+
+def _feed_counts(rows, sink: bool) -> dict:
+    """Batch totals computed from the feed rows alone: every row is new."""
+    bad = [r for r in rows if r[2] not in ("insert", "update", "delete")
+           or (r[2] != "delete" and r[4] is None)]
+    clean = [r for r in rows if r not in bad]
+    winners = {r[3] for r in clean}
+    return {
+        "events_in": len(rows),
+        # a sink dedups routed errors by (part, seq); without one every
+        # erroring delivery is counted
+        "errors": len({(r[1], r[0]) for r in bad}) if sink else len(bad),
+        "changes": len(winners),
+        "dedup_dropped": len(clean) - len(winners),
+    }
+
+
+@pytest.mark.parametrize("sink", [True, False], ids=["sink", "no_sink"])
+def test_batch_accounting_from_the_feed(spark, tmp_table_path, tmp_path, sink):
+    """events_in, errors, changes and the lineage's dedup_dropped equal
+    counts made from the feed, on an empty, a mixed, a fully redelivered
+    and a poison batch. The mixed batch holds an erroring row delivered
+    twice, a clean row delivered twice and a key updated twice."""
+    from ingestion3_spark.cdc.merge import lineage_df
+
+    base = make_corpus(20, seed=29, max_len=16)
+    table = _seed_table(spark, tmp_table_path, base)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err") if sink else None)
+    mixed = [
+        (1, 0, "update", "doc-00000001", [1], 1, "s1"),
+        (2, 0, "insert", "doc-new", None, None, "s1"),  # errors, twice
+        (2, 0, "insert", "doc-new", None, None, "s1"),
+        (3, 1, "update", "doc-00000002", [2], 1, "s1"),  # clean, twice
+        (3, 1, "update", "doc-00000002", [2], 1, "s1"),
+        (4, 1, "update", "doc-00000001", [3], 1, "s1"),  # doc 1 again
+        (5, 0, "delete", "doc-00000004", None, None, None),
+        (6, 1, "bogus", "doc-00000005", [4], 1, "s1"),
+    ]
+    poison = [(7 + i, i % 2, "insert", f"doc-p{i}", None, None, "s1") for i in range(5)]
+    zero = {"events_in": 0, "errors": 0, "changes": 0, "dedup_dropped": 0}
+    batches = [([], zero), (mixed, _feed_counts(mixed, sink)),
+               (mixed, zero), (poison, _feed_counts(poison, sink))]
+    dropped = 0
+    for bid, (rows, want) in enumerate(batches):
+        n_snaps = len(table.snapshots())
+        stats = eng.apply_batch(_rows_df(spark, rows), batch_id=bid)
+        got_dropped = sum(r["dedup_dropped"] for r in stats.merge.lineage) if stats.merge else 0
+        got = {"events_in": stats.events_in, "errors": stats.errors,
+               "changes": stats.changes, "dedup_dropped": got_dropped}
+        assert got == want, (bid, got, want)
+        # a batch with nothing new commits nothing
+        assert len(table.snapshots()) == n_snaps + (1 if want["events_in"] else 0)
+        dropped += want["dedup_dropped"]
+    assert dropped == 2  # the clean redelivery and doc 1's earlier update
+    assert lineage_df(table).agg({"dedup_dropped": "sum"}).collect()[0][0] == dropped
+    assert table.checkpoint() == {0: 11, 1: 10}
+    feed = pa.table({
+        "seq": pa.array([r[0] for r in mixed + poison], pa.int64()),
+        "part": pa.array([r[1] for r in mixed + poison], pa.int32()),
+        "op": [r[2] for r in mixed + poison],
+        "doc_id": [r[3] for r in mixed + poison],
+        "tokens": pa.array([r[4] for r in mixed + poison], pa.list_(pa.int32())),
+        "source": [r[6] for r in mixed + poison],
+    })
+    assert not diff_states(
+        replay_oracle(base, feed),
+        table_state([r.asDict() for r in table.read().collect()]),
+    )
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_packed_domain_guard_raises_and_commits_nothing(spark, tmp_path, merge_mode):
+    """(seq, part) packs into one long only while 0 <= part < 2^16 and
+    0 <= seq < 2^42: a clean row outside that domain makes apply_batch
+    raise before anything is committed."""
+    base = make_corpus(10, seed=31, max_len=16)
+    table = _seed_table(spark, str(tmp_path / "t"), base, merge_mode=merge_mode)
+    eng = ReplayEngine(spark, table)
+    eng.apply_batch(_rows_df(spark, [(5, 0, "update", "doc-00000001", [1], 1, "s1")]), 0)
+    before = (table.checkpoint(), len(table.snapshots()),
+              sorted(e.path for e in table.live_files()))
+    for bad in [(6, 2 ** 16, "update", "doc-00000002", [2], 1, "s1"),
+                (-1, 1, "update", "doc-00000003", [3], 1, "s1")]:
+        with pytest.raises(Exception, match="packed-order domain"):
+            eng.apply_batch(_rows_df(spark, [bad]), batch_id=1)
+        assert (table.checkpoint(), len(table.snapshots()),
+                sorted(e.path for e in table.live_files())) == before
