@@ -32,10 +32,13 @@ from ingestion3_spark.lakehouse.adapter import TableAdapter
 from ingestion3_spark.lakehouse.table import LakeTable, Snapshot
 from ingestion3_spark.session import local_frame
 
-LINEAGE_COLS = [
-    "batch_id", "part", "inserts", "updates", "deletes",
-    "invalid_deletes", "dedup_dropped", "errors",
-]
+ACTIONS = ("inserts", "updates", "deletes", "invalid_deletes")
+LINEAGE_COLS = ["batch_id", "part", *ACTIONS, "dedup_dropped", "errors"]
+
+
+def _totals(lineage) -> dict:
+    """Per-action totals over lineage rows."""
+    return {a: sum(r[a] for r in lineage) for a in ACTIONS}
 
 
 @dataclass
@@ -47,11 +50,7 @@ class MergeResult:
 
     @property
     def counts(self) -> dict:
-        tot = {"inserts": 0, "updates": 0, "deletes": 0, "invalid_deletes": 0}
-        for row in self.lineage:
-            for k in tot:
-                tot[k] += row.get(k, 0)
-        return tot
+        return _totals(self.lineage)
 
 
 def merge_batch(
@@ -61,11 +60,10 @@ def merge_batch(
     batch_id: int,
     checkpoint: dict[int, int],
     touched: set[int],
-    broadcast_winners: bool = True,
-    extra_lineage_future: "futures.Future | None" = None,
-    extra_lineage: dict[tuple, dict] | None = None,
-    clean_count: int | None = None,
-    n_winners: int | None = None,
+    broadcast_winners: bool,
+    errors: futures.Future,
+    clean_count: int,
+    n_winners: int,
 ) -> MergeResult:
     """Apply deduped per-key changes to the table in one transaction.
 
@@ -76,12 +74,18 @@ def merge_batch(
     __bucket)`` — reused for classification, the base anti-join, and bucket
     pruning without recomputing anything wide. ``broadcast_winners``: False
     when the winner set is too big to broadcast, which takes the COW
-    shuffle-join fallback. ``extra_lineage_future``: an
-    in-flight error-routing job whose per-part counts must land in the same
-    atomic commit; it is awaited only after the write jobs are submitted, so
-    error routing overlaps the merge write. Op classification recomputes
-    insert-vs-update against actual base state (an 'insert' of an existing
-    key is an update and vice versa, mirroring upsert semantics,
+    shuffle-join fallback.
+
+    The batch's counts are taken as given, not recounted: ``errors`` is the
+    in-flight error-routing job, resolving to ``{part: distinct (part, seq)
+    errors}``, whose counts land in the same atomic commit; it is awaited
+    only after the write jobs are submitted, so error routing overlaps the
+    merge write. ``clean_count`` (clean deliveries) and ``n_winners`` come
+    from the caller's winner aggregate: classification must cover exactly
+    ``n_winners`` keys, and ``clean_count - n_winners`` is the batch's
+    ``dedup_dropped``. Op classification recomputes insert-vs-update
+    against actual base state (an 'insert' of an existing key is an update
+    and vice versa, mirroring upsert semantics,
     ``NaraMergeUtil.scala:246-264``).
     """
     key = table.key_column
@@ -99,20 +103,14 @@ def merge_batch(
             .join(base_keys, key, "left")
             .withColumn(
                 "action",
-                F.when((F.col("op") == "delete") & F.col("_matched").isNotNull(), "delete")
-                .when(F.col("op") == "delete", "invalid_delete")
-                .when(F.col("_matched").isNotNull(), "update")
-                .otherwise("insert"),
+                F.when((F.col("op") == "delete") & F.col("_matched").isNotNull(), "deletes")
+                .when(F.col("op") == "delete", "invalid_deletes")
+                .when(F.col("_matched").isNotNull(), "updates")
+                .otherwise("inserts"),
             )
             .groupBy("part")
-            .agg(
-                F.sum(F.when(F.col("action") == "insert", 1).otherwise(0)).alias("inserts"),
-                F.sum(F.when(F.col("action") == "update", 1).otherwise(0)).alias("updates"),
-                F.sum(F.when(F.col("action") == "delete", 1).otherwise(0)).alias("deletes"),
-                F.sum(F.when(F.col("action") == "invalid_delete", 1).otherwise(0)).alias(
-                    "invalid_deletes"
-                ),
-            )
+            .agg(*(F.sum(F.when(F.col("action") == a, 1).otherwise(0)).alias(a)
+                   for a in ACTIONS))
             .collect()
         )
 
@@ -179,71 +177,46 @@ def merge_batch(
         return table.write_files(new_data)
 
     # classification and the data write are independent — run them as
-    # concurrent Spark jobs; commit happens only after both (and the error
-    # job, if any) have landed.
+    # concurrent Spark jobs; commit happens only after both and the error
+    # job have landed.
     with futures.ThreadPoolExecutor(max_workers=2) as pool:
         f_classify = pool.submit(classify_job)
         f_write = pool.submit(write_job)
         agg = f_classify.result()
         new_files = f_write.result()
 
-    lineage_rows = {}
+    lineage: dict[int, dict] = {}
+
+    def row(part: int) -> dict:
+        return lineage.setdefault(part, {"batch_id": batch_id, "part": part,
+                                         **dict.fromkeys(LINEAGE_COLS[2:], 0)})
+
     for r in agg:
-        p = int(r["part"]) if r["part"] is not None else -1
-        lineage_rows[(batch_id, p)] = {
-            "batch_id": batch_id,
-            "part": p,
-            "inserts": int(r["inserts"]),
-            "updates": int(r["updates"]),
-            "deletes": int(r["deletes"]),
-            "invalid_deletes": int(r["invalid_deletes"]),
-            "dedup_dropped": 0,
-            "errors": 0,
-        }
-    post = sum(
-        r["inserts"] + r["updates"] + r["deletes"] + r["invalid_deletes"]
-        for r in lineage_rows.values()
-    )
-    if n_winners is not None and post != n_winners:
+        row(-1 if r["part"] is None else int(r["part"])).update(
+            {a: int(r[a]) for a in ACTIONS})
+    counts = _totals(lineage.values())
+    post = sum(counts.values())
+    if post != n_winners:
         raise AssertionError(
             f"classification covered {post} winners, expected {n_winners}"
         )
-    if extra_lineage_future is not None:
-        got = extra_lineage_future.result()
-        if got:
-            extra_lineage = {**(extra_lineage or {}), **got}
-    if clean_count is not None and clean_count - post:
+    for part, n in errors.result().items():
+        row(part)["errors"] += n
+    if clean_count - post:
         # dedup_dropped = clean deliveries minus surviving changes —
         # derived from already-collected counts, no extra Spark job
-        extra_lineage = dict(extra_lineage or {})
-        e = extra_lineage.setdefault((batch_id, -1), {})
-        e["dedup_dropped"] = e.get("dedup_dropped", 0) + (clean_count - post)
-    for k, extra in (extra_lineage or {}).items():
-        row = lineage_rows.setdefault(
-            k,
-            {
-                "batch_id": k[0], "part": k[1], "inserts": 0, "updates": 0,
-                "deletes": 0, "invalid_deletes": 0, "dedup_dropped": 0, "errors": 0,
-            },
-        )
-        row.update({kk: row.get(kk, 0) + vv for kk, vv in extra.items()})
+        row(-1)["dedup_dropped"] += clean_count - post
 
     touched_files = (
         [] if mor else [e for e in table.live_files() if e.bucket in touched]
     )
-    counts = {
-        "inserts": sum(r["inserts"] for r in lineage_rows.values()),
-        "updates": sum(r["updates"] for r in lineage_rows.values()),
-        "deletes": sum(r["deletes"] for r in lineage_rows.values()),
-        "invalid_deletes": sum(r["invalid_deletes"] for r in lineage_rows.values()),
-    }
     snap = table.commit(
         operation="merge-delta" if mor else "merge",
         add_files=new_files,
         remove_paths={e.path for e in touched_files},
         checkpoint=checkpoint,
         batch_id=batch_id,
-        lineage=list(lineage_rows.values()),
+        lineage=list(lineage.values()),
         summary=counts,
     )
     if mor:
@@ -262,7 +235,7 @@ def merge_batch(
                 f"+ins={counts['inserts']} -del={counts['deletes']} "
                 f"expected={expected} got={rows_after_total}"
             )
-    return MergeResult(snap, list(lineage_rows.values()), rows_before_total, rows_after_total)
+    return MergeResult(snap, list(lineage.values()), rows_before_total, rows_after_total)
 
 
 def lineage_df(table: LakeTable, spark=None) -> DataFrame:

@@ -20,7 +20,7 @@ snapshots + full-output overwrite, ``dataStorage/InputHelper.scala:29-69``,
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +50,9 @@ _ERR_SCHEMA = ", ".join(f"{c} {t}" for c, t in _ERR_COLS)
 
 @dataclass
 class BatchStats:
+    """A batch's new deliveries, distinct erroring ``(part, seq)`` and
+    winners; ``merge`` is None when nothing new came, and nothing commits."""
+
     batch_id: int
     events_in: int
     errors: int
@@ -75,8 +78,9 @@ class ReplayEngine:
     # on the table, with the real-Iceberg binding documented per call;
     # LakeTable is the sandbox implementation
     table: TableAdapter
-    error_dir: str | None = None
-    history: list[BatchStats] = field(default_factory=list)
+    # the error report's root (a deployment path, outside the table, where
+    # maintenance never reaches); every batch routes its errors here
+    error_dir: str
 
     @staticmethod
     def create_table(
@@ -112,6 +116,11 @@ class ReplayEngine:
         * phase 3: one atomic commit (data + checkpoint + lineage),
           folding in the error-routing counts via its future.
 
+        Feed order: a batch whose least new ``(seq, part)`` lies below the
+        checkpoint's greatest raises ``ValueError`` and commits nothing —
+        COW would apply it over the later row, MOR would or would not
+        depending on whether a compaction dropped the base's ``(seq, part)``.
+
         Wide-payload bytes shuffled per batch: |winners| rows, not |events|
         (round-1's wide dedup shuffle + DISK_ONLY spill was the scaling
         bottleneck — memory-bandwidth-bound, flat past ~8 cores). Concurrent
@@ -119,9 +128,8 @@ class ReplayEngine:
         optimistic winners over unvalidated rows (18.54 s) in the round-4
         interleaved A/B (BENCH.md "Round-4 saturation check").
 
-        ``BatchStats.errors`` is the committed lineage's error total: with
-        an error sink that counts distinct ``(part, seq)``, as
-        ``errors_df`` does; without one it counts erroring deliveries.
+        ``BatchStats.errors`` is the committed lineage's error total,
+        distinct ``(part, seq)`` as ``errors_df`` counts them.
         """
         from concurrent import futures
 
@@ -148,16 +156,15 @@ class ReplayEngine:
                 # for checkpoint bookkeeping
                 f_offsets = pool.submit(
                     lambda: pending.groupBy("part")
-                    .agg(F.max("seq").alias("hi"), F.count(F.lit(1)).alias("n"))
+                    .agg(F.min("seq").alias("lo"), F.max("seq").alias("hi"),
+                         F.count(F.lit(1)).alias("n"))
                     .collect()
                 )
                 # winners over the clean rows (the wide scan re-evaluates
-                # the error predicate); the error-routing job (if any) runs
-                # in a parallel thread and its per-part counts join the
-                # atomic commit via the future
-                f_err = None
-                if self.error_dir is not None:
-                    f_err = pool.submit(self._route_errors, pending, batch_id)
+                # the error predicate); the error-routing job runs in a
+                # parallel thread and its per-part counts join the atomic
+                # commit via the future
+                f_err = pool.submit(self._route_errors, pending, batch_id)
                 winners = (
                     dd.winner_keys_packed(clean.select(key, "seq", "part", "op"), key=key)
                     .withColumn("__bucket", self.table.bucket_expr())
@@ -171,18 +178,15 @@ class ReplayEngine:
                 offset_rows = f_offsets.result()
                 if not offset_rows:
                     # fully-redelivered/empty batch: nothing to commit
-                    stats = BatchStats(batch_id, 0, 0, 0, None)
-                    self.history.append(stats)
-                    return stats
+                    return BatchStats(batch_id, 0, 0, 0, None)
+                least = min((int(r["lo"]), int(r["part"])) for r in offset_rows)
+                if ckpt and least < max((s, p) for p, s in ckpt.items()):
+                    raise ValueError(f"batch {batch_id} orders before the applied "
+                                     f"checkpoint {ckpt}: least (seq, part) {least}")
                 touched = {int(r["__bucket"]) for r in bucket_rows}
                 n_winners = sum(int(r["n"]) for r in bucket_rows)
                 events_in = sum(int(r["n"]) for r in offset_rows)
                 n_clean = sum(int(r["n_clean"]) for r in bucket_rows)
-                n_err = events_in - n_clean
-                # without a sink the errors are counted here, not routed
-                err_by_part = {}
-                if n_err and f_err is None:
-                    err_by_part[(batch_id, -1)] = {"errors": n_err}
                 new_ckpt = dict(ckpt)
                 for r in offset_rows:
                     p = int(r["part"])
@@ -268,23 +272,20 @@ class ReplayEngine:
                     checkpoint=new_ckpt,
                     touched=touched,
                     broadcast_winners=bcast,
-                    extra_lineage=err_by_part,
-                    extra_lineage_future=f_err,
+                    errors=f_err,
                     clean_count=n_clean,
                     n_winners=n_winners,
                 )
             errors = sum(r["errors"] for r in result.lineage)
-            stats = BatchStats(batch_id, events_in, errors, n_winners, result)
-            self.history.append(stats)
-            return stats
+            return BatchStats(batch_id, events_in, errors, n_winners, result)
         finally:
             if winners is not None:
                 winners.unpersist()
 
-    def _route_errors(self, pending: DataFrame, batch_id: int) -> dict:
+    def _route_errors(self, pending: DataFrame, batch_id: int) -> dict[int, int]:
         """Error-table write (MessageCollector report analog) + per-part
-        counts for lineage, keyed ``(batch_id, part)``. At-least-once —
-        counts and ``errors_df`` dedup by (part, seq). The write is
+        counts for lineage, ``{part: n}``. At-least-once — counts and
+        ``errors_df`` dedup by (part, seq). The write is
         partitioned by ``batch_id`` so the count-back read prunes to THIS
         batch's files (O(batch errors), not O(all errors ever written)).
         An observation on the write's own input tells whether this attempt
@@ -317,7 +318,7 @@ class ReplayEngine:
             .groupBy("part").agg(F.count("*").alias("n"))
             .collect()
         )
-        return {(batch_id, int(r["part"])): {"errors": int(r["n"])} for r in rows}
+        return {int(r["part"]): int(r["n"]) for r in rows}
 
     # ------------------------------------------------------------ full replay
     def replay(
@@ -422,7 +423,7 @@ class ReplayEngine:
         Reads therefore dedup on the unique delivery key (part, seq).
         """
         schema = "batch_id bigint, " + _ERR_SCHEMA
-        if not self.error_dir or not os.path.exists(self._err_path()):
+        if not os.path.exists(self._err_path()):
             return local_frame(self.spark, [], schema)
         return (
             self.spark.read.schema(schema).parquet(self._err_path())

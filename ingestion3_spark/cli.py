@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -59,12 +60,18 @@ def _load_or_create(spark, path: str, num_buckets: int, merge_mode: str = "cow")
                                      merge_mode=merge_mode)
 
 
+def _err_dir(args) -> str:
+    # beside the table, never inside it, where vacuum (or Iceberg's
+    # remove_orphan_files) would reach it
+    return args.err_dir or os.path.normpath(args.table) + "_errors"
+
+
 def cmd_replay(args) -> int:
     from ingestion3_spark.cdc.replay import ReplayEngine
 
     spark = _spark(args)
     table = _load_or_create(spark, args.table, args.buckets, args.merge_mode)
-    eng = ReplayEngine(spark, table, error_dir=args.err_dir)
+    eng = ReplayEngine(spark, table, error_dir=_err_dir(args))
     stats = eng.replay(spark.read.parquet(args.feed), num_batches=args.batches,
                        minor_every=args.minor_every,
                        compact_every=args.compact_every,
@@ -82,7 +89,7 @@ def cmd_stream(args) -> int:
 
     spark = _spark(args)
     table = _load_or_create(spark, args.table, args.buckets)
-    eng = ReplayEngine(spark, table, error_dir=args.err_dir)
+    eng = ReplayEngine(spark, table, error_dir=_err_dir(args))
     stream = file_feed_stream(spark, args.feed_dir, max_files_per_trigger=args.max_files)
     q = stream_replay(eng, stream, args.checkpoint, trigger_once=not args.continuous,
                       processing_time=args.trigger_interval)
@@ -170,7 +177,8 @@ def build_parser() -> argparse.ArgumentParser:
     r = sub.add_parser("replay", help="batch replay feed -> table")
     r.add_argument("--feed", required=True)
     r.add_argument("--table", required=True)
-    r.add_argument("--err-dir", default=None)
+    r.add_argument("--err-dir", default=None,
+                   help="error report root (default: <table>_errors beside the table)")
     r.add_argument("--batches", type=int, default=1)
     r.add_argument("--buckets", type=int, default=16)
     r.add_argument("--merge-mode", choices=["cow", "mor"], default="cow",
@@ -190,7 +198,8 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--feed-dir", required=True)
     s.add_argument("--table", required=True)
     s.add_argument("--checkpoint", required=True)
-    s.add_argument("--err-dir", default=None)
+    s.add_argument("--err-dir", default=None,
+                   help="error report root (default: <table>_errors beside the table)")
     s.add_argument("--buckets", type=int, default=16)
     s.add_argument("--max-files", type=int, default=None)
     s.add_argument("--continuous", action="store_true")

@@ -39,6 +39,7 @@ import json
 import os
 import shutil
 import uuid
+from concurrent import futures
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -290,12 +291,7 @@ class LakeTable:
         return F.pmod(F.xxhash64(c.cast("string")), F.lit(self.num_buckets)).cast("int")
 
     # ----------------------------------------------------------------- write
-    def write_files(
-        self,
-        df: DataFrame,
-        schema_version: int | None = None,
-        key_partitioned: bool = False,
-    ) -> list[FileEntry]:
+    def write_files(self, df: DataFrame, key_partitioned: bool = False) -> list[FileEntry]:
         """Write df (current-schema columns) as bucket-partitioned parquet.
 
         Returns manifest entries; does NOT commit. Default: the df is
@@ -309,28 +305,9 @@ class LakeTable:
         payload in the merge's critical path, at the cost of up-to
         tasks-per-bucket files (bounded by compact()).
         """
-        sv = schema_version or self.schema_version
-        # cast to the declared schema: feeds written before a widen (e.g.
-        # int n_tok into a bigint column) land with the table's type
-        cols = [F.col(f.name).cast(f.type).alias(f.name) for f in self.fields(sv)]
-        batch_rel = os.path.join("data", f"batch-{uuid.uuid4().hex[:12]}")
-        out_dir = os.path.join(self.path, batch_rel)
-        out = df.select(*cols).withColumn("__bucket", self.bucket_expr())
-        if not key_partitioned:
-            out = out.repartition("__bucket")
-        (
-            out.write.partitionBy("__bucket")
-            .mode("error")
-            .parquet(out_dir)
-        )
-        return self._scan_batch_dir(batch_rel, sv)
+        return self._write(df, (), "batch", "base", key_partitioned)
 
-    def write_delta_files(
-        self,
-        df: DataFrame,
-        schema_version: int | None = None,
-        key_partitioned: bool = False,
-    ) -> list[FileEntry]:
+    def write_delta_files(self, df: DataFrame, key_partitioned: bool = False) -> list[FileEntry]:
         """MOR: write row-level changes (upserts + delete tombstones) as
         bucket-partitioned delta files; does NOT rewrite any base file.
 
@@ -341,29 +318,26 @@ class LakeTable:
         vs O(touched buckets) for COW — the only viable shape when a batch's
         keys spray across every bucket of a 10^10-row table.
         """
-        sv = schema_version or self.schema_version
+        return self._write(df, _SYS, "delta", "delta", key_partitioned)
+
+    def _write(
+        self, df: DataFrame, envelope: tuple[str, ...], prefix: str, kind: str,
+        key_partitioned: bool,
+    ) -> list[FileEntry]:
+        """The one writer body: cast to the declared schema (feeds written
+        before a widen, e.g. int n_tok into a bigint column, land with the
+        table's type), add the ``envelope`` columns from their unprefixed
+        names, write under a fresh ``data/<prefix>-*`` dir partitioned by
+        ``__bucket`` and return the written files' manifest entries."""
+        sv = self.schema_version
         cols = [F.col(f.name).cast(f.type).alias(f.name) for f in self.fields(sv)]
-        cols += [
-            F.col("op").cast("string").alias("__op"),
-            F.col("seq").cast("long").alias("__seq"),
-            F.col("part").cast("int").alias("__part"),
-        ]
-        batch_rel = os.path.join("data", f"delta-{uuid.uuid4().hex[:12]}")
+        cols += [F.col(c[2:]).cast(_SYS_TYPES[c]).alias(c) for c in envelope]
+        batch_rel = os.path.join("data", f"{prefix}-{uuid.uuid4().hex[:12]}")
         out_dir = os.path.join(self.path, batch_rel)
-        out = df.select(*cols, self.bucket_expr(self.key_column).alias("__bucket"))
+        out = df.select(*cols, self.bucket_expr().alias("__bucket"))
         if not key_partitioned:
             out = out.repartition("__bucket")
-        (
-            out.write.partitionBy("__bucket")
-            .mode("error")
-            .parquet(out_dir)
-        )
-        return self._scan_batch_dir(batch_rel, sv, kind="delta")
-
-    def _scan_batch_dir(self, batch_rel: str, schema_version: int, kind: str = "base") -> list[FileEntry]:
-        from concurrent import futures as _fut
-
-        out_dir = os.path.join(self.path, batch_rel)
+        out.write.partitionBy("__bucket").mode("error").parquet(out_dir)
         paths: list[str] = []
         for root, _dirs, files in os.walk(out_dir):
             paths.extend(
@@ -378,11 +352,11 @@ class LakeTable:
             bucket_part = [p for p in rel.split(os.sep) if p.startswith("__bucket=")]
             bucket = int(bucket_part[0].split("=")[1]) if bucket_part else -1
             rows = pq.read_metadata(full).num_rows
-            return FileEntry(rel, bucket, rows, schema_version, batch_rel, kind)
+            return FileEntry(rel, bucket, rows, sv, batch_rel, kind)
 
         if len(paths) <= 4:
             return [entry(p) for p in paths]
-        with _fut.ThreadPoolExecutor(max_workers=16) as pool:
+        with futures.ThreadPoolExecutor(max_workers=16) as pool:
             return list(pool.map(entry, paths))
 
     # ---------------------------------------------------------------- commit

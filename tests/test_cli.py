@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -51,6 +52,9 @@ def test_cli_minor_compact_mor(tmp_path):
     rep = _run("replay", "--feed", feed, "--table", table, "--buckets", "4",
                "--batches", "3", "--merge-mode", "mor")
     rows = rep[-1]["rows"]
+    # without --err-dir the error report lands beside the table, not in it
+    assert os.path.isdir(os.path.join(table + "_errors", "errors_v2"))
+    assert sorted(os.listdir(table)) == ["data", "metadata"]
     comp = _run("compact", "--table", table, "--minor")
     assert comp[0]["folded_layers"] >= 2
     # folded stack reads identically through the same CLI surface

@@ -213,7 +213,7 @@ def test_snapshots_parse_batch_ids_and_next_id_advances():
     assert [s.batch_id for s in snaps] == [6, 7, None]
     assert [s.last_batch_id for s in snaps] == [6, 7, 7]
     assert snaps[1].checkpoint == {0: 9}
-    assert ReplayEngine(spark=None, table=ad)._next_batch_id() == 8
+    assert ReplayEngine(spark=None, table=ad, error_dir="errors")._next_batch_id() == 8
 
 
 def test_checkpoint_survives_a_maintenance_snapshot():

@@ -187,7 +187,7 @@ def _fold_and_check(spark, path, base, layers):
     from ingestion3_spark.lakehouse.table import _SYS
 
     table = _mor_table(spark, path, base)
-    eng = ReplayEngine(spark, table)
+    eng = ReplayEngine(spark, table, error_dir=path + "_errors")
     for bid, rows in enumerate(layers):
         eng.apply_batch(spark.createDataFrame(rows, _EVENT_SCHEMA), batch_id=bid)
     plans = []
@@ -229,7 +229,7 @@ def _fold_and_check(spark, path, base, layers):
 
 def test_mor_insert_delete_insert_one_key(spark, tmp_table_path, tmp_path):
     table = _mor_table(spark, tmp_table_path)
-    eng = ReplayEngine(spark, table)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
     rows = [
         (1, 0, "insert", "doc-x", [1, 2], 2, "cc"),
         (2, 0, "delete", "doc-x", None, None, None),

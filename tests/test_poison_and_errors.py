@@ -8,7 +8,9 @@ Covers the round-3 hardening (ADVICE r2):
   (NULL packed winner key);
 - NULL ops are error-routed, not dropped;
 - ``BatchStats.errors``, the lineage and ``errors_df`` count a redelivered
-  erroring event once.
+  erroring event once;
+- a batch that orders before the applied checkpoint raises and commits
+  nothing.
 """
 
 from __future__ import annotations
@@ -70,17 +72,6 @@ def test_poison_batch_all_errors(spark, tmp_table_path, tmp_path):
         replay_oracle(base, _poison_feed(50)),
         table_state([r.asDict() for r in table.read().collect()]),
     )
-
-
-def test_poison_batch_without_error_sink(spark, tmp_table_path):
-    """Same poison batch, no error_dir configured: metrics come from a
-    plain count, the commit still lands."""
-    base = make_corpus(10, seed=12, max_len=16)
-    table = _seed_table(spark, tmp_table_path, base)
-    eng = ReplayEngine(spark, table, error_dir=None)
-    stats = eng.apply_batch(_spark_df(spark, _poison_feed(20)), batch_id=0)
-    assert stats.events_in == 20 and stats.errors == 20 and stats.changes == 0
-    assert table.read().count() == 10
 
 
 def test_unknown_op_doc_not_phantom_deleted(spark, tmp_table_path, tmp_path):
@@ -245,7 +236,7 @@ def _rows_df(spark, rows):
     return spark.createDataFrame(rows, _EVENT_SCHEMA)
 
 
-def _feed_counts(rows, sink: bool) -> dict:
+def _feed_counts(rows) -> dict:
     """Batch totals computed from the feed rows alone: every row is new."""
     bad = [r for r in rows if r[2] not in ("insert", "update", "delete")
            or (r[2] != "delete" and r[4] is None)]
@@ -253,16 +244,14 @@ def _feed_counts(rows, sink: bool) -> dict:
     winners = {r[3] for r in clean}
     return {
         "events_in": len(rows),
-        # a sink dedups routed errors by (part, seq); without one every
-        # erroring delivery is counted
-        "errors": len({(r[1], r[0]) for r in bad}) if sink else len(bad),
+        # routed errors count once per (part, seq)
+        "errors": len({(r[1], r[0]) for r in bad}),
         "changes": len(winners),
         "dedup_dropped": len(clean) - len(winners),
     }
 
 
-@pytest.mark.parametrize("sink", [True, False], ids=["sink", "no_sink"])
-def test_batch_accounting_from_the_feed(spark, tmp_table_path, tmp_path, sink):
+def test_batch_accounting_from_the_feed(spark, tmp_table_path, tmp_path):
     """events_in, errors, changes and the lineage's dedup_dropped equal
     counts made from the feed, on an empty, a mixed, a fully redelivered
     and a poison batch. The mixed batch holds an erroring row delivered
@@ -271,7 +260,7 @@ def test_batch_accounting_from_the_feed(spark, tmp_table_path, tmp_path, sink):
 
     base = make_corpus(20, seed=29, max_len=16)
     table = _seed_table(spark, tmp_table_path, base)
-    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err") if sink else None)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
     mixed = [
         (1, 0, "update", "doc-00000001", [1], 1, "s1"),
         (2, 0, "insert", "doc-new", None, None, "s1"),  # errors, twice
@@ -284,8 +273,8 @@ def test_batch_accounting_from_the_feed(spark, tmp_table_path, tmp_path, sink):
     ]
     poison = [(7 + i, i % 2, "insert", f"doc-p{i}", None, None, "s1") for i in range(5)]
     zero = {"events_in": 0, "errors": 0, "changes": 0, "dedup_dropped": 0}
-    batches = [([], zero), (mixed, _feed_counts(mixed, sink)),
-               (mixed, zero), (poison, _feed_counts(poison, sink))]
+    batches = [([], zero), (mixed, _feed_counts(mixed)),
+               (mixed, zero), (poison, _feed_counts(poison))]
     dropped = 0
     for bid, (rows, want) in enumerate(batches):
         n_snaps = len(table.snapshots())
@@ -314,6 +303,11 @@ def test_batch_accounting_from_the_feed(spark, tmp_table_path, tmp_path, sink):
     )
 
 
+def _table_record(table):
+    return (table.checkpoint(), len(table.snapshots()),
+            sorted(e.path for e in table.live_files()))
+
+
 @pytest.mark.parametrize("merge_mode", ["cow", "mor"])
 def test_packed_domain_guard_raises_and_commits_nothing(spark, tmp_path, merge_mode):
     """(seq, part) packs into one long only while 0 <= part < 2^16 and
@@ -321,13 +315,34 @@ def test_packed_domain_guard_raises_and_commits_nothing(spark, tmp_path, merge_m
     raise before anything is committed."""
     base = make_corpus(10, seed=31, max_len=16)
     table = _seed_table(spark, str(tmp_path / "t"), base, merge_mode=merge_mode)
-    eng = ReplayEngine(spark, table)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
     eng.apply_batch(_rows_df(spark, [(5, 0, "update", "doc-00000001", [1], 1, "s1")]), 0)
-    before = (table.checkpoint(), len(table.snapshots()),
-              sorted(e.path for e in table.live_files()))
+    before = _table_record(table)
     for bad in [(6, 2 ** 16, "update", "doc-00000002", [2], 1, "s1"),
                 (-1, 1, "update", "doc-00000003", [3], 1, "s1")]:
         with pytest.raises(Exception, match="packed-order domain"):
             eng.apply_batch(_rows_df(spark, [bad]), batch_id=1)
-        assert (table.checkpoint(), len(table.snapshots()),
-                sorted(e.path for e in table.live_files())) == before
+        assert _table_record(table) == before
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_batch_ordering_before_the_checkpoint_raises(spark, tmp_path, merge_mode):
+    """The truth order is global (seq, part). Batch 2's (seq 50, part 1)
+    update of a key orders before batch 1's (seq 100, part 0) update of it,
+    although it is new on part 1. It must raise and commit nothing: COW
+    would overwrite the key with it, and MOR after a major compact (base
+    rows carry no (seq, part)) would too."""
+    base = make_corpus(10, seed=37, max_len=16)
+    table = _seed_table(spark, str(tmp_path / "t"), base, merge_mode=merge_mode)
+    eng = ReplayEngine(spark, table, error_dir=str(tmp_path / "err"))
+    eng.apply_batch(_rows_df(spark, [(100, 0, "update", "doc-00000001", [1], 1, "s1"),
+                                     (1, 1, "update", "doc-00000002", [2], 1, "s1")]), 0)
+    if merge_mode == "mor":
+        table.compact()
+        assert all(e.kind == "base" for e in table.live_files())
+    before = _table_record(table)
+    with pytest.raises(ValueError, match="orders before the applied checkpoint"):
+        eng.apply_batch(_rows_df(spark, [(50, 1, "update", "doc-00000001", [3], 1, "s1")]), 1)
+    assert _table_record(table) == before
+    state = table_state([r.asDict() for r in table.read().collect()])
+    assert state["doc-00000001"] == ((1,), 1, "s1")

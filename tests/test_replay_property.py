@@ -3,8 +3,10 @@
 The seeded generator (cdc/generator.py) covers rate-based adversarial
 cases; hypothesis covers *structural* ones it can't reach at low rates —
 e.g. insert->delete->insert of one key in one batch, every event of a feed
-hitting the same key, all-delete feeds, empty-token-array payloads.
-Engine state must equal the dict-replay oracle on every generated feed.
+hitting the same key, all-delete feeds, empty-token-array payloads,
+erroring rows and exact redeliveries. Engine state must equal the
+dict-replay oracle on every generated feed, and the batches' error, row
+and batch-id bookkeeping must agree with the feed.
 """
 
 from __future__ import annotations
@@ -25,23 +27,19 @@ event_st = st.tuples(
     st.integers(0, 1),                     # part
     st.lists(st.integers(0, 100), max_size=4),  # tokens (may be empty)
     st.booleans(),                         # wrong n_tok
+    st.sampled_from(["", "", "", "null_tokens", "bogus_op"]),  # routed error
+    st.booleans(),                         # delivered twice (exact copy)
 )
 
 
 def _feed(events) -> pa.Table:
-    seqs, parts, ops, ids, toks, ntoks = [], [], [], [], [], []
-    for i, (op, ki, part, tokens, bad) in enumerate(events):
-        seqs.append(i + 1)
-        parts.append(part)
-        ops.append(op)
-        ids.append(KEYS[ki])
-        if op == "delete":
-            toks.append(None)
-            ntoks.append(None)
-        else:
-            toks.append(tokens)
-            ntoks.append(len(tokens) + (3 if bad else 0))
-    n = len(events)
+    rows = []
+    for i, (op, ki, part, tokens, bad, fault, twice) in enumerate(events):
+        op = "bogus" if fault == "bogus_op" else op
+        toks = None if op == "delete" or fault == "null_tokens" else tokens
+        ntok = None if toks is None else len(toks) + (3 if bad else 0)
+        rows += [(i + 1, part, op, KEYS[ki], toks, ntok)] * (2 if twice else 1)
+    seqs, parts, ops, ids, toks, ntoks = zip(*rows)
     return pa.table(
         {
             "seq": pa.array(seqs, pa.int64()),
@@ -50,9 +48,10 @@ def _feed(events) -> pa.Table:
             "doc_id": pa.array(ids, pa.string()),
             "tokens": pa.array(toks, pa.list_(pa.int32())),
             "n_tok": pa.array(ntoks, pa.int32()),
-            "source": pa.array(["synth"] * n, pa.string()),
+            "source": pa.array(["synth"] * len(rows), pa.string()),
+            # a function of seq, so a redelivery is byte-identical
             "ts": pa.array(
-                np.int64(1_700_000_000) * 1_000_000 + np.arange(n) * 1_000_000,
+                np.int64(1_700_000_000) * 1_000_000 + np.array(seqs) * 1_000_000,
                 pa.timestamp("us"),
             ),
         }
@@ -83,12 +82,21 @@ def test_random_feed_matches_oracle(
     )
     eng = ReplayEngine(spark, table, error_dir=str(tmp / "err"))
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    eng.replay(spark.createDataFrame(feed.to_pandas()), num_batches=n_batches,
-               minor_every=minor_every, compact_every=compact_every,
-               expire_every=expire_every, keep_last=2)
+    stats = eng.replay(spark.createDataFrame(feed.to_pandas()), num_batches=n_batches,
+                       minor_every=minor_every, compact_every=compact_every,
+                       expire_every=expire_every, keep_last=2)
     expected = replay_oracle(None, feed)
-    actual = table_state([r.asDict() for r in table.read().collect()])
-    assert not diff_states(expected, actual)
+    live = table.read().collect()
+    assert not diff_states(expected, table_state([r.asDict() for r in live]))
+    # the bookkeeping, from BatchStats alone so it holds across expiry
+    bad = {(r["part"], r["seq"]) for r in feed.to_pylist()
+           if r["op"] not in ("insert", "update", "delete")
+           or (r["op"] != "delete" and r["tokens"] is None)}
+    assert sum(s.errors for s in stats) == eng.errors_df().count() == len(bad)
+    assert sum(s.merge.counts["inserts"] - s.merge.counts["deletes"]
+               for s in stats if s.merge) == len(live)
+    ids = [s.batch_id for s in stats]
+    assert len(set(ids)) == len(ids)
 
 
 def test_error_predicate_matches_messages(spark):
